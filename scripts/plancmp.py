@@ -1,11 +1,19 @@
 """Dump the NORMALIZED executed plan of the gate-shaped kNN join.
 
-Bisection tool for wall-clock anomalies on this co-tenant box: when a
+Bisection tool for wall-clock anomalies on a co-tenant box: when a
 gate reading moves, the first question is "did the plan change?".  Run
-this at two git revisions (a worktree for the old one) and diff the
-outputs — expression ids, plan ids, and cache-relation numbers are
-normalized away, so byte-identical files mean Catalyst planned the
-same physical join and the anomaly is environmental.
+this at two git revisions (a `git clone` or `git archive` copy for the
+old one) and diff the outputs — expression ids, plan ids, cache-relation
+numbers and object hashes are normalized away, so byte-identical files
+mean Catalyst planned the same physical join and the anomaly is
+environmental.
+
+Banked baselines (sf0.01, replicate 4, local[4], 8 shuffle partitions):
+  bench_records/plancmp_knn_two_stage.txt  the two-stage kNN join
+      (ring join, split, SAT expansion, stage 2, union) it replaced
+  bench_records/plancmp_knn_one_pass.txt   the one-pass kNN join (SAT
+      row -> bound -> one bounded cover join -> pre-rank -> rank)
+Diff a new dump against the one-pass file first.
 
 Round-6 precedent: the r6 2-core gate pair read kNN 3x slower than
 r5's at both levels while PIP got FASTER; this tool proved HEAD and
@@ -48,6 +56,7 @@ def main() -> None:
     plan = re.sub(r"#\d+", "#X", plan)
     plan = re.sub(r"\(\d+\)", "(N)", plan)
     plan = re.sub(r"id=\d+", "id=X", plan)
+    plan = re.sub(r"@[0-9a-f]+", "@X", plan)
     with open(out, "w") as f:
         f.write(plan)
     print("rows", res.count(), "->", out)

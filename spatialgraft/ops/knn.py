@@ -1,66 +1,47 @@
-"""Two-stage exact kNN join (J5/J6/J7 + W1/J9/F6) — fully JVM-side.
+"""One-pass exact kNN join (J5/J6/J7 + W1/J9/F6): bound, probe, rank.
 
-Re-design of the reference's range-based kNN join
+Re-design of the reference's two-round kNN join
 (reference/src/main/scala/cs/purdue/edu/spatialrdd/impl/knnJoinRDD.scala:45-242)
-as pure DataFrame operations (whole-stage codegen end to end — an earlier
-applyInPandas cogroup variant was 10-30x slower at scale because the
-grouped-Arrow plumbing dominates):
+as pure DataFrame operations.  The reference learns each query's kth
+distance from a first local join, then re-joins the queries whose kth
+circle crossed their partition (nextRound, knnJoinRDD.scala:63-140).
+Here the bound comes from a count, before any join, so one bounded join
+answers every query:
 
-  layout   the slim point projection repartitions by (cell, salt) to
-           the session shuffle width and caches: partition sizing then
-           follows configuration (spark.sql.shuffle.partitions), not
-           core count, and hash(cell, salt) satisfies every window's
-           clustering below — the candidate stream is never exchanged.
-  stage 1  each query is multicast to the cell ring around its home cell
-           (bounded fan-out, like the reference's local `knnjoin_`,
-           RtreePartition.scala:248-292); an equi-join on (cell, salt)
-           + a per-(cell, salt, qid) pre-rank (row_number <= k) bounds
-           the rows entering the global qid window to <= 9k per query
-           no matter how dense the cell is, then the global window rank
-           (dist2, doc_key) gives k local candidates and the
-           kth-distance upper bound kth2.  Cells denser than
-           3k*KNN_SAMPLE_MOD participate at a density-adaptive rate
-           1/ceil(sqrt(cellcnt/3k)) — the sampled kth is still a valid
-           upper bound and such rings are never marked done, so both
-           stage-1 candidate volume and stage-2 bound-radius survivors
-           grow as sqrt(k*cellcnt) instead of cellcnt while exactness
-           moves wholesale to stage 2.
-  split    DONE queries: ring held >= k candidates and the kth-radius
-           box lies inside the ring's exact milli bounds -> the local
-           top-k is the true kNN (correctKNN/nextRoundKNN split,
-           knnJoinRDD.scala:63-98).
-  expand   UNDERFILLED queries (< k ring candidates): the exact cell
-           histogram's 2-D summed-area table (O(#cells), driver-side)
-           gives the smallest ring radius whose box holds >= k points;
-           the distance to that box's far corner is an exact kth upper
-           bound.  This replaces the old world-cover fallback — no
-           full-table scan ever, the re-join box is as small as the
-           data allows (role of the reference's iterative nextRound
-           loop, knnJoinRDD.scala:100-140).
-  stage 2  boundary + underfilled queries re-join points over
-           cover_cells(radius box) with the exact bound dist2 <= kth2
-           (the reference's `rkjoin`, RtreePartition.scala:294-324).
-  rank     row_number over (dist2, doc_key) pins a deterministic total
-           order (the reference's sort+slice at knnJoinRDD.scala:217-231
-           is tie-unstable; ties are real here, so the canon matters).
+  layout  the slim point projection repartitions by (cell[, salt]) to
+          the session shuffle width (and caches, on the eager path):
+          partition sizing follows configuration, not core count, and
+          hash(cell[, salt]) satisfies the pre-rank window's clustering,
+          so the candidate stream is never exchanged before the rank.
+  bound   one histogram of the points at the tile grid (config.TILE_TX x
+          TILE_TY, finer than the join grid) becomes a summed-area table
+          (SAT: 2-D prefix sums) shipped as one broadcast row.  Inside
+          one projection each query picks, with 4 SAT lookups per
+          candidate radius, the smallest candidate tile box around it
+          that holds >= min(k, n) points.  The distance to that box's far corner
+          (+1 milli) is an exact upper bound rm on its kth distance.
+  probe   the join-grid cells covering q +- rm, minus those whose part
+          of the box the SAT shows empty, join the points on
+          (cell[, salt]) (the reference's `rkjoin`,
+          RtreePartition.scala:294-324).  An int box prefilter and then
+          dist2 <= rm^2 keep only rows that can rank.
+  rank    a per-(cell[, salt], qid) pre-rank (row_number <= k, no
+          exchange) caps what any one cell sends to the global qid
+          window, whose row_number over (dist2, doc_key) pins a
+          deterministic total order (the reference's sort+slice at
+          knnJoinRDD.scala:217-231 is tie-unstable; ties are real here).
 
-Driver-side construction cost matters too: plan building used to run
-~40 chained withColumn calls (each one a full Catalyst analysis of a
-growing tree — measured ~2.5 s of pure driver time per sf0.1 call) plus
-an eager queries.count() for the broadcast auto-gate.  Construction now
-fuses each logical step into ONE selectExpr (lateral column aliases
-keep sub-expressions single-sourced) and the broadcast gate reads the
-optimizer's sizeInBytes estimate instead of running a count — the only
-jobs a call runs are the histogram collect and the caller's action.
+The eager and lazy paths run this same plan; they differ only in where
+the SAT row comes from (a driver-side numpy build from one collected
+histogram, or the same numpy build inside a one-partition mapInArrow).
 
-Skew (J9): pass a SpatialPartitioning `plan` and stage 1 joins on
-(cell, salt) — the data side hashes hot cells into `nsplits` salt
-slices, the multicast ring replicates across them (the reference salts
-skewed partitions inside kNN round 2, knnJoinRDD.scala:120-215).
-Without a plan the ring join's probe side still gets AQE skew-split.
+Skew (J9): pass a SpatialPartitioning `plan` (or a uniform `salt`) and
+the probe joins on (cell, salt) — the data side hashes hot cells into
+`nsplits` salt slices, the cover replicates across them (the reference
+salts skewed partitions inside kNN round 2, knnJoinRDD.scala:120-215).
 
-Predicates (F6): `pred` restricts the data side before any join — the
-reference's `knnFilter(entry, k, z)` z-predicate
+Predicates (F6): `pred` restricts the data side before the histogram —
+the reference's `knnFilter(entry, k, z)` z-predicate
 (SpatialRdd.scala:150); kNN is then exact among qualifying points.
 
 All distances are float64 (dx*dx + dy*dy) with the same expression
@@ -69,6 +50,8 @@ shape as the DuckDB oracle -> bit-exact.
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
 from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -84,446 +67,138 @@ _X = "(CAST(mx - 180000 AS DOUBLE) / 1000.0)"
 _Y = "(CAST(my - 90000 AS DOUBLE) / 1000.0)"
 _D2 = (f"(qx - {_X}) * (qx - {_X}) + (qy - {_Y}) * (qy - {_Y})")
 
-# ring-expansion candidate radii (cells): powers of two up to the full
-# grid (derived from the configured grid so a granularity change keeps
-# the largest radius covering the world) — one row per radius per
-# underfilled query, driver-independent.  The largest radius must reach
-# max(CX, CY) - 1 (a query in a corner cell expanding to the far edge):
-# (max - 1).bit_length() + 1 radii guarantees 2^last >= max - 1 for ANY
-# grid, including non-power-of-two SPARK_GRAFT_CELL_CX/_CY overrides
-# (the old max().bit_length() span only covered power-of-two dims —
-# under e.g. 96x48 a corner query whose need sat beyond radius 64
-# matched no radius and was silently dropped; ADVICE r5).
-_EXPAND_RADII = [2 ** i
-                 for i in range((max(C.CELL_CX, C.CELL_CY) - 1)
-                                .bit_length() + 1)]
+_TX, _TY = C.TILE_TX, C.TILE_TY
+_TILE = (f"((mx * {_TX}) div {C.WORLD_MX}) * {_TY} "
+         f"+ ((my * {_TY}) div {C.WORLD_MY})")
+
+# candidate bound radii (tiles): 0, then 2^i and 3*2^i, so the picked
+# box is at most 1.5x wider than the smallest that suffices.  The last
+# radius reaches the far edge of the tile grid from a corner query, so
+# every query finds a box holding all n points.
+_REACH = 1 << (max(_TX, _TY) - 1).bit_length()
+_RADII = sorted({0} | {r for i in range(_REACH.bit_length())
+                       for r in (1 << i, 3 << i) if r <= _REACH})
+
+# multicast fan-out the broadcast gate assumes per query (cover cells)
+_COVER_FANOUT = 64
 
 
-def _with_ring_bounds(queries: DataFrame,
-                      cell_counts: DataFrame | None = None,
-                      k: int = C.DEFAULT_K) -> DataFrame:
-    """Attach the exact milli bounds of each query's candidate cell ring
-    (cell cx covers mx in [ceil(cx*W/CX), ceil((cx+1)*W/CX) - 1]).
-
-    Adaptive fan-out: when the query's own cell already holds plenty of
-    points (>= 3k, from the broadcast cell histogram) the ring is just
-    that cell — in dense regions (the skew hotspot) a 3x3 ring would
-    over-fetch ~100x for the bound it buys.  Sparse cells use the 3x3
-    ring.  Correctness is unaffected: the ring only produces the kth
-    bound; too few candidates -> exact SAT-driven stage-2 fallback."""
-    cx = f"((qmx * {C.CELL_CX}) div {C.WORLD_MX})"
-    cy = f"((qmy * {C.CELL_CY}) div {C.WORLD_MY})"
-    q = queries.selectExpr(
-        "qid", "qmx", "qmy", "qx", "qy",
-        f"{cx} AS _cx", f"{cy} AS _cy",
-        f"({cx}) * {C.CELL_CY} + ({cy}) AS cell")
-    if cell_counts is not None:
-        q = (q.join(F.broadcast(cell_counts), on="cell", how="left")
-             .selectExpr("qid", "qmx", "qmy", "qx", "qy", "_cx", "_cy",
-                         f"CASE WHEN coalesce(cellcnt, 0) >= {3 * k} "
-                         "THEN 0 ELSE 1 END AS _r"))
-    else:
-        q = q.selectExpr("qid", "qmx", "qmy", "qx", "qy", "_cx", "_cy",
-                         "1 AS _r")
-    # one fused select: corners via lateral aliases, then the ring's
-    # exact milli bounds (same floor arithmetic as the original chain)
-    return q.selectExpr(
-        "qid", "qmx", "qmy", "qx", "qy", "_cx", "_cy", "_r",
-        "greatest(_cx - _r, 0) AS _cxa",
-        f"least(_cx + _r, {C.CELL_CX - 1}) AS _cxb",
-        "greatest(_cy - _r, 0) AS _cya",
-        f"least(_cy + _r, {C.CELL_CY - 1}) AS _cyb",
-        f"(_cxa * {C.WORLD_MX} + {C.CELL_CX - 1}) div {C.CELL_CX} "
-        "AS ring_x0",
-        f"((_cxb + 1) * {C.WORLD_MX} + {C.CELL_CX - 1}) "
-        f"div {C.CELL_CX} - 1 AS ring_x1",
-        f"(_cya * {C.WORLD_MY} + {C.CELL_CY - 1}) div {C.CELL_CY} "
-        "AS ring_y0",
-        f"((_cyb + 1) * {C.WORLD_MY} + {C.CELL_CY - 1}) "
-        f"div {C.CELL_CY} - 1 AS ring_y1")
+def _sat(tile: np.ndarray, cnt: np.ndarray) -> np.ndarray:
+    """Flattened SAT of a tile histogram (distinct tile ids), with a
+    zero row and column of padding: entry i*(TY+1)+j (0-based) holds the
+    number of points in tiles with tile_x < i and tile_y < j, so the
+    last entry is the total."""
+    grid = np.zeros(_TX * _TY, np.int64)
+    grid[tile] = cnt
+    sat = np.zeros((_TX + 1, _TY + 1), np.int64)
+    sat[1:, 1:] = grid.reshape(_TX, _TY).cumsum(0).cumsum(1)
+    return sat.ravel()
 
 
-def _ring(qmeta: DataFrame) -> DataFrame:
-    """Multicast each query row to its ring cells (projected to what
-    stage 1 consumes: qid, qx, qy, cell)."""
-    return (qmeta
-            .withColumn("_gx", F.explode(F.sequence("_cxa", "_cxb")))
-            .withColumn("_gy", F.explode(F.sequence("_cya", "_cyb")))
-            .selectExpr("qid", "qx", "qy",
-                        f"_gx * {C.CELL_CY} + _gy AS cell"))
+def _sat_partition(batches):
+    """mapInArrow body of the lazy path: the whole histogram (one
+    partition) in, one SAT row out."""
+    tiles, cnts = [np.zeros(0, np.int64)], [np.zeros(0, np.int64)]
+    for b in batches:
+        tiles.append(b.column("tile").to_numpy())
+        cnts.append(b.column("cnt").to_numpy())
+    sat = _sat(np.concatenate(tiles), np.concatenate(cnts))
+    yield pa.RecordBatch.from_arrays(
+        [pa.array([sat], pa.list_(pa.int64()))], names=["sat"])
 
 
-def _sat_rows(counts: dict[int, int]) -> list[int]:
-    """Flattened inclusive 2-D prefix sums over the cell grid, with a
-    zero row/column of padding: entry (i, j), i in [0,CX], j in [0,CY],
-    at 1-based index i*(CY+1)+j+1, holds sum of counts over cells with
-    cell_x < i and cell_y < j.  O(#cells) memory — scale-independent."""
-    cx1, cy1 = C.CELL_CX + 1, C.CELL_CY + 1
-    sat = [0] * (cx1 * cy1)
-    for i in range(1, cx1):
-        row_acc = 0
-        base, prev = i * cy1, (i - 1) * cy1
-        for j in range(1, cy1):
-            row_acc += counts.get((i - 1) * C.CELL_CY + (j - 1), 0)
-            sat[base + j] = sat[prev + j] + row_acc
-    return sat
-
-
-def _ring_count_sql(sat: str, cxa: str, cxb: str, cya: str, cyb: str
-                    ) -> str:
-    """Sum of cell counts over the inclusive cell-rectangle via 4 SAT
-    lookups (element_at is 1-based; the padding makes -1 edges safe)."""
-    cy1 = C.CELL_CY + 1
-
+def _box_count(i0: str, i1: str, j0: str, j1: str) -> str:
+    """Points in tiles [i0..i1] x [j0..j1] (inclusive): 4 lookups into
+    the padded SAT column `sat` (element_at is 1-based)."""
     def at(i: str, j: str) -> str:
-        return (f"element_at({sat}, "
-                f"CAST(({i}) * {cy1} + ({j}) + 1 AS INT))")
-
-    return (f"{at(f'{cxb} + 1', f'{cyb} + 1')} - {at(cxa, f'{cyb} + 1')} "
-            f"- {at(f'{cxb} + 1', cya)} + {at(cxa, cya)}")
-
-
-def _dense_prefix(spark, cell_counts: DataFrame) -> DataFrame:
-    """Lazy twin of _sat_rows: INCLUSIVE 2-D prefix sums P'(pi, pj) =
-    sum of counts over cells with cell_x <= pi, cell_y <= pj, as a
-    dense O(#cells) DataFrame (two cumulative windows over the grid).
-    SAT semantics (strict <) are recovered at lookup time by shifting
-    corner indices down by one (missing/-1 keys coalesce to 0)."""
-    grid = (spark.range(C.CELL_CX).selectExpr("id AS cx")
-            .crossJoin(spark.range(C.CELL_CY).selectExpr("id AS cy")))
-    c2d = cell_counts.selectExpr(f"cell div {C.CELL_CY} AS cx",
-                                 f"cell % {C.CELL_CY} AS cy", "cellcnt")
-    d = (grid.join(c2d, on=["cx", "cy"], how="left")
-         .selectExpr("cx AS pi", "cy AS pj",
-                     "coalesce(cellcnt, CAST(0 AS BIGINT)) AS c"))
-    w1 = (Window.partitionBy("pi").orderBy("pj")
-          .rowsBetween(Window.unboundedPreceding, 0))
-    w2 = (Window.partitionBy("pj").orderBy("pi")
-          .rowsBetween(Window.unboundedPreceding, 0))
-    return (d.withColumn("s1", F.sum("c").over(w1))
-            .withColumn("p", F.sum("s1").over(w2))
-            .select("pi", "pj", "p"))
+        return (f"element_at(sat, CAST(({i}) * {_TY + 1} + ({j}) + 1 "
+                "AS INT))")
+    return (f"({at(f'{i1} + 1', f'{j1} + 1')} - {at(i0, f'{j1} + 1')} "
+            f"- {at(f'{i1} + 1', j0)} + {at(i0, j0)})")
 
 
-def _ring_count_join(prefix_df: DataFrame):
-    """add_ring_count strategy (lazy path): 4 signed corner lookups per
-    key against the dense inclusive-prefix grid — explode to corners,
-    broadcast-join the O(#cells) grid, sum back.  Exact twin of the
-    element_at SAT formula."""
-    def add(df: DataFrame, key_cols: list[str], out: str) -> DataFrame:
-        corners = (df.selectExpr(
-            *key_cols,
-            "explode(array("
-            "struct(CAST(_cxb AS BIGINT) AS pi, "
-            "CAST(_cyb AS BIGINT) AS pj, 1 AS sgn), "
-            "struct(CAST(_cxa AS BIGINT) - 1 AS pi, "
-            "CAST(_cyb AS BIGINT) AS pj, -1 AS sgn), "
-            "struct(CAST(_cxb AS BIGINT) AS pi, "
-            "CAST(_cya AS BIGINT) - 1 AS pj, -1 AS sgn), "
-            "struct(CAST(_cxa AS BIGINT) - 1 AS pi, "
-            "CAST(_cya AS BIGINT) - 1 AS pj, 1 AS sgn)"
-            ")) AS c")
-            .selectExpr(*key_cols, "c.pi AS pi", "c.pj AS pj",
-                        "c.sgn AS sgn")
-            .join(F.broadcast(prefix_df), on=["pi", "pj"], how="left")
-            .groupBy(*key_cols)
-            .agg(F.sum(F.expr("sgn * coalesce(p, CAST(0 AS BIGINT))"))
-                 .alias(out)))
-        return df.join(corners, on=key_cols, how="inner")
-    return add
+def _tile_box(r: str, tx: str = "_tx", ty: str = "_ty"
+              ) -> tuple[str, str, str, str]:
+    """Tile bounds of the radius-r box around the query tile (tx, ty),
+    clamped to the grid."""
+    return (f"greatest({tx} - {r}, 0)", f"least({tx} + {r}, {_TX - 1})",
+            f"greatest({ty} - {r}, 0)", f"least({ty} + {r}, {_TY - 1})")
 
 
-def _ring_count_expr(sat_df: DataFrame):
-    """add_ring_count strategy (eager path): the driver-built SAT array
-    broadcast-cross-joined in, 4 element_at lookups inline."""
-    def add(df: DataFrame, key_cols: list[str], out: str) -> DataFrame:
-        return (df.crossJoin(F.broadcast(sat_df))
-                .withColumn(out, F.expr(_ring_count_sql(
-                    "sat", "_cxa", "_cxb", "_cya", "_cyb")))
-                .drop("sat"))
-    return add
+def _bounded(queries: DataFrame, sat: DataFrame, k: int,
+             n_groups: int) -> DataFrame:
+    """Per query: the probe box q +- rm and kth2 = rm^2 (degrees^2).
 
-
-def _stages(spark, pts: DataFrame, queries: DataFrame, k: int,
-            keys: list[str], salt_map, bc_ring: bool, bc_cover: bool,
-            cell_counts: DataFrame, add_ring_count,
-            need, sampling_guard: str, sample_stage1: bool,
-            persist_intermediates: bool,
-            prune_cells=None, expand: bool = True,
-            usalt: int | None = None, smj_pts: bool = False,
-            cover_split: dict[int, int] | None = None,
-            s2mode: str = "doc"):
-    """Shared stage-1 / split / expand / stage-2 assembly.  The eager
-    and lazy paths differ only in what they inject here: the histogram
-    source (collected vs lazy agg), the SAT lookup strategy (driver
-    array vs prefix-grid join), the `need` threshold (literal vs
-    least(k, total) column), whether stage-1 sampling is compiled in,
-    and whether intermediates persist.  Returns (result, persisted).
-
-    prune_cells: sFilter presence pruning of the stage-2 cover (X6
-    wired into J7, VERDICT r4 item 6) — multicast (query, cell) rows
-    whose cell holds no data are dropped BEFORE the stage-2 shuffle
-    (they can never match the inner join; results are identical).  A
-    set[int] (eager: the driver already holds the exact histogram, so
-    the prune is free) or a DataFrame with a `cell` column (lazy: an
-    O(#cells) broadcast semi-join).  expand=False skips building the
-    SAT ring-expansion subtree — only valid when the caller KNOWS no
-    query can underfill usefully (eager, total == 0).  usalt: uniform
-    salt modulus when the salt column came from knn_join(salt=N) rather
-    than a per-cell plan.  smj_pts: plant a merge (sort-merge) hint on
-    the points side of both stage joins — SMJ never builds a broadcast,
-    so a points side whose Catalyst size estimate is garbage (explode-
-    blind Generate lineage) can never be planted as a broadcast build;
-    an explicitly-broadcast ring/cover side still wins hint resolution
-    (broadcast beats merge), so small-query plans keep theirs.
-    cover_split: {cell: nsplits} map of dense cells whose stage-2 probe
-    spreads over nsplits csplit sub-keys (config.KNN_S2SPLIT; eager
-    path only — the driver histogram is its source).  s2mode: "doc"
-    (hot points partitioned, cover replicated) or "qid" (cover
-    partitioned, hot points replicated)."""
-    persisted = []
-    dense_thresh = 3 * k * C.KNN_SAMPLE_MOD
-
-    def salt_explode(df: DataFrame, cols: list[str]) -> DataFrame:
-        """Replicate multicast rows across the salt slices of their
-        cell, matching the data side's pmod(xxhash64(doc_key), n)
-        assignment — every (point, query) pair meets on exactly one
-        (cell, salt) key."""
-        if usalt is not None:
-            return df.selectExpr(
-                *cols, "cell",
-                f"explode(sequence(CAST(0 AS BIGINT), "
-                f"CAST({usalt - 1} AS BIGINT))) AS salt")
-        return (df.join(salt_map.select("cell", "nsplits"), on="cell",
-                        how="left")
-                .selectExpr(*cols, "cell",
-                            "explode(sequence(CAST(0 AS BIGINT), "
-                            "CAST(coalesce(nsplits, 1) - 1 AS BIGINT)"
-                            ")) AS salt"))
-
-    qmeta = _with_ring_bounds(queries, cell_counts, k)
-    ring = _ring(qmeta)
-    if len(keys) > 1:
-        ring = salt_explode(ring, ["qid", "qx", "qy"])
-    if bc_ring:
-        ring = F.broadcast(ring)
-
-    w = Window.partitionBy("qid").orderBy("dist2", "doc_key")
-    # pre-rank: per (cell[, salt], qid) top-k before the global window,
-    # so the qid shuffle carries <= 9k rows per query regardless of
-    # cell density (a salted slice's top-k superset keeps every
-    # candidate a cell-level top-k could contain)
-    wpre = Window.partitionBy(*keys, "qid").orderBy(
-        "dist2", "doc_key")
-
-    # stage 1 samples very dense cells: the sampled kth distance is
-    # still a valid upper bound (fewer points -> larger kth), and no
-    # query whose ring touches a sampled cell is ever marked done —
-    # stage 2 redoes it exactly against the FULL data.  The density-
-    # adaptive rate 1/ceil(sqrt(c/3k)) balances stage-1 candidate
-    # volume against stage-2 bound-radius survivors (both grow as
-    # sqrt(k*c) instead of c).  The filter runs on the cached cells, so
-    # (cell, salt) partitioning is preserved and the windows stay
-    # exchange-free.
-    if sample_stage1:
-        pts1 = (pts.join(F.broadcast(cell_counts), on="cell", how="left")
-                .selectExpr(
-                    "cell", "doc_key", "mx", "my",
-                    *(["salt"] if len(keys) > 1 else []),
-                    f"CASE WHEN coalesce(cellcnt, 0) < {dense_thresh} "
-                    "THEN CAST(1 AS BIGINT) ELSE CAST(ceil(sqrt("
-                    f"CAST(coalesce(cellcnt, 0) AS DOUBLE) / {3.0 * k}"
-                    ")) AS BIGINT) END AS _m")
-                .where(F.expr("pmod(xxhash64(doc_key * 2 + 1), _m) = 0"))
-                .drop("_m"))
-    else:
-        pts1 = pts
-
-    # stage 1: ring candidates, local top-k, kth bound.  The projection
-    # down to (keys, qid, doc_key, dist2) BEFORE the pre-rank matters:
-    # those are the rows the per-group top-k heap/sort streams, and
-    # qx/qy/mx/my riding along would double the sort's memory traffic
-    # (the measured 4N bottleneck is the memory bus, not ALU).
-    if smj_pts:
-        pts1 = pts1.hint("merge")
-    cand1 = (pts1.join(ring, on=keys, how="inner")
-             .selectExpr(*keys, "qid", "doc_key", f"{_D2} AS dist2")
-             .withColumn("prnk", F.row_number().over(wpre))
-             .where(F.col("prnk") <= k)
-             .drop("prnk")
-             .withColumn("rnk", F.row_number().over(w))
-             .where(F.col("rnk") <= k))
-    if persist_intermediates:
-        cand1 = cand1.persist()
-        persisted.append(cand1)
-
-    # left join keeps queries whose whole ring is empty (cnt=0);
-    # ring_sum (true counts via SAT) detects rings touching sampled
-    # cells: sum >= dense_thresh is conservative (sum >= max)
-    agg = cand1.groupBy("qid").agg(F.count("*").alias("cnt"),
-                                   F.max("dist2").alias("kth2"))
-    stats = (add_ring_count(qmeta, ["qid"], "ring_sum")
-             .select("qid", "qmx", "qmy", "qx", "qy", "_cx", "_cy",
-                     "ring_sum",
-                     "ring_x0", "ring_x1", "ring_y0", "ring_y1")
-             .join(agg, on="qid", how="left")
-             .fillna({"cnt": 0}))
-    if persist_intermediates:
-        stats = stats.persist()
-        persisted.append(stats)
-
-    # filled queries: exact kth bound from the ring top-k; done only
-    # when the ring was complete (no sampled cell) AND the kth-radius
-    # box sits inside the ring
-    filled = (stats.where(F.col("cnt") >= k)
-              .selectExpr(
-                  "*",
-                  "CAST(ceil(sqrt(kth2) * 1000.0) + 1 AS BIGINT) AS rm",
-                  f"({sampling_guard}"
-                  "qmx - rm >= ring_x0 AND qmx + rm <= ring_x1 AND "
-                  "qmy - rm >= ring_y0 AND qmy + rm <= ring_y1) AS done"))
-
-    done = (cand1.join(filled.where("done").select("qid"), on="qid")
-            .select("qid", "doc_key", "dist2", "rnk"))
-
-    # underfilled queries (< k in the ring): SAT ring expansion — the
-    # smallest power-of-two cell radius whose box holds >= need points;
-    # distance to that box's far corner (+1 milli guard) is an exact
-    # kth upper bound.  Skipped when the caller knows the table is
-    # empty (expand=False): _rc >= 0 would pick radius 1 for every
-    # query and union a useless stage-2 branch.
-    if not expand:
-        exp = None
-    else:
-        under = stats.where(F.col("cnt") < k)
-        radii = ", ".join(str(r) for r in _EXPAND_RADII)
-        exp_base = (
-            under
-            .selectExpr("qid", "qmx", "qmy", "qx", "qy", "_cx",
-                        "_cy", f"explode(array({radii})) AS _r")
-            .selectExpr("qid", "qmx", "qmy", "qx", "qy", "_r",
-                        "greatest(_cx - _r, 0) AS _cxa",
-                        f"least(_cx + _r, {C.CELL_CX - 1}) AS _cxb",
-                        "greatest(_cy - _r, 0) AS _cya",
-                        f"least(_cy + _r, {C.CELL_CY - 1}) AS _cyb"))
-        exp = (
-            add_ring_count(exp_base, ["qid", "_r"], "_rc")
-            .where(F.col("_rc") >= need)
-            .withColumn("_pick", F.row_number().over(
-                Window.partitionBy("qid").orderBy("_r")))
-            .where(F.col("_pick") == 1)
-            # exact milli bounds of the chosen box (same floor arithmetic
-            # as _with_ring_bounds), far-corner distance -> kth bound;
-            # lateral aliases keep each bound single-sourced
+    The radius pick runs over ARRAYS of queries (n_groups rows, hashed
+    by qid), each joined to the one SAT row: a higher-order function
+    cannot compile into the join's codegen stage, so every joined row is
+    materialized, and one joined row per query would copy the whole
+    array once per query.  `need` is min(k, n), n = the SAT's last
+    entry."""
+    need = f"least({k}, element_at(sat, -1))"
+    tile = _tile_box("r", "q._tx", "q._ty")
+    # first radius whose box holds `need` points; radii past it skip
+    # their lookups
+    pick = (f"aggregate(array({', '.join(map(str, _RADII))}), -1, "
+            f"(a, r) -> CASE WHEN a >= 0 THEN a "
+            f"WHEN {_box_count(*tile)} >= {need} THEN r ELSE -1 END)")
+    i0, i1, j0, j1 = _tile_box("_r")
+    return (queries.selectExpr(
+                f"pmod(xxhash64(qid), {n_groups}) AS _g",
+                "struct(qid, qmx, qmy, qx, qy, "
+                f"(qmx * {_TX}) div {C.WORLD_MX} AS _tx, "
+                f"(qmy * {_TY}) div {C.WORLD_MY} AS _ty) AS q")
+            # an explicit repartition: AQE would coalesce these few
+            # small rows into one task, but the pick is CPU, not bytes
+            .repartition(n_groups, "_g")
+            .groupBy("_g").agg(F.collect_list("q").alias("qs"))
+            .crossJoin(F.broadcast(sat))
+            .selectExpr(f"explode(transform(qs, q -> struct(q, {pick} AS _r)))"
+                        " AS b")
+            .select("b.q.*", "b._r")
+            # exact milli bounds of the picked box (tile i covers mx in
+            # [ceil(i*W/TX), ceil((i+1)*W/TX) - 1]); its far corner,
+            # +1 milli of float guard, bounds the kth distance
             .selectExpr(
                 "qid", "qmx", "qmy", "qx", "qy",
-                f"(_cxa * {C.WORLD_MX} + {C.CELL_CX - 1}) "
-                f"div {C.CELL_CX} AS _bx0",
-                f"((_cxb + 1) * {C.WORLD_MX} + {C.CELL_CX - 1}) "
-                f"div {C.CELL_CX} - 1 AS _bx1",
-                f"(_cya * {C.WORLD_MY} + {C.CELL_CY - 1}) "
-                f"div {C.CELL_CY} AS _by0",
-                f"((_cyb + 1) * {C.WORLD_MY} + {C.CELL_CY - 1}) "
-                f"div {C.CELL_CY} - 1 AS _by1",
+                f"({i0} * {C.WORLD_MX} + {_TX - 1}) div {_TX} AS _bx0",
+                f"(({i1} + 1) * {C.WORLD_MX} + {_TX - 1}) div {_TX} - 1 "
+                "AS _bx1",
+                f"({j0} * {C.WORLD_MY} + {_TY - 1}) div {_TY} AS _by0",
+                f"(({j1} + 1) * {C.WORLD_MY} + {_TY - 1}) div {_TY} - 1 "
+                "AS _by1",
                 "greatest(qmx - _bx0, _bx1 - qmx) AS _dxm",
-                "greatest(qmy - _by0, _by1 - qmy) AS _dym")
-            .selectExpr(
-                "qid", "qmx", "qmy", "qx", "qy",
+                "greatest(qmy - _by0, _by1 - qmy) AS _dym",
                 "CAST(ceil(sqrt(CAST(_dxm * _dxm + _dym * _dym "
-                "AS DOUBLE))) + 1 AS BIGINT) AS rm",
-                "CAST(rm * rm AS DOUBLE) / 1.0E6 AS kth2"))
+                "AS DOUBLE))) + 1 AS BIGINT) AS rm")
+            .selectExpr(
+                "qid", "qx", "qy",
+                "CAST(rm * rm AS DOUBLE) / 1.0E6 AS kth2",
+                "greatest(0, qmx - rm) AS xmin",
+                f"least({C.WORLD_MX - 1}, qmx + rm) AS xmax",
+                "greatest(0, qmy - rm) AS ymin",
+                f"least({C.WORLD_MY - 1}, qmy + rm) AS ymax"))
 
-    # stage 2: exact radius re-join for boundary + underfilled queries
-    bq = filled.where("NOT done").select(
-        "qid", "qmx", "qmy", "qx", "qy", "rm", "kth2")
-    if expand:
-        bq = bq.unionByName(exp)
-    bq = bq.selectExpr(
-        "qid", "qx", "qy", "kth2",
-        "greatest(0, qmx - rm) AS xmin",
-        f"least({C.WORLD_MX - 1}, qmx + rm) AS xmax",
-        "greatest(0, qmy - rm) AS ymin",
-        f"least({C.WORLD_MY - 1}, qmy + rm) AS ymax")
-    cover = cover_cells(bq)
-    if prune_cells is not None:
-        if isinstance(prune_cells, DataFrame):
-            cover = cover.join(
-                F.broadcast(prune_cells.select("cell")),
-                on="cell", how="left_semi")
-        else:
-            from ..sfilter import prune_cover
-            cover = prune_cover(cover, prune_cells)
-    if len(keys) > 1:
-        # stage 2 joins on (cell, salt) too: the probe work of a dense
-        # cell then spreads over its salt slices instead of landing in
-        # one task (the measured 4N straggler), and the pts side's
-        # (cell, salt) hash partitioning is reused with NO exchange
-        # (the old cell-only join forced a full re-shuffle of pts on
-        # the salted path)
-        cover = salt_explode(cover, ["qid", "qx", "qy", "kth2"])
-    if bc_cover:
-        cover = F.broadcast(cover)
-    pts2 = pts.hint("merge") if smj_pts else pts
 
-    def probe(p, c, jkeys):
-        """Stage-2 probe: equi-join on jkeys, exact dist filter, then
-        the per-(jkeys, qid) pre-rank — the rows it emits (<= k per
-        group) feed the global qid rank below."""
-        wp = Window.partitionBy(*jkeys, "qid").orderBy("dist2",
-                                                       "doc_key")
-        return (p.join(c, on=jkeys, how="inner")
-                .selectExpr(*jkeys, "qid", "doc_key", "kth2",
-                            f"{_D2} AS dist2")
-                .where(F.col("dist2") <= F.col("kth2"))
-                .select(*jkeys, "qid", "doc_key", "dist2")
-                .withColumn("prnk", F.row_number().over(wp))
-                .where(F.col("prnk") <= k)
-                .select("qid", "doc_key", "dist2"))
+def _nonempty_cover(bq: DataFrame, sat: DataFrame) -> DataFrame:
+    """Join-grid cells of each probe box, keeping only cells whose part
+    of the box holds a point at tile resolution (the sFilter presence
+    prune, X6 -> J7, answered from the same SAT).  A left semi join
+    against the one SAT row, so the array never rides on a cover row."""
+    cx, cy = f"(cell div {C.CELL_CY})", f"(cell % {C.CELL_CY})"
 
-    if cover_split and not bc_cover:
-        # hot-cell split (config.KNN_S2SPLIT): dense cells' single-task
-        # probe spreads over csplit sub-keys; cold cells keep the
-        # exchange-free cache-local probe via a separate join branch
-        # (splitting inside ONE join would re-key — and re-shuffle —
-        # the whole points side).  A query's final top-k is the global
-        # qid rank over the union of both branches' pre-ranked rows,
-        # and each branch's pre-rank keeps every row a cell-level
-        # top-k could contain, so results are bit-identical (twin
-        # tests: test_knn_paths.py::test_s2split_*).
-        cs_df = F.broadcast(spark.createDataFrame(
-            [(c, n) for c, n in sorted(cover_split.items())],
-            "cell bigint, cs_n int"))
-        jkeys = keys + ["csplit"]
-        pcols = pts2.columns
-        ccols = [col for col in cover.columns if col != "cell"]
-        hot_pts = pts2.join(cs_df, on="cell", how="inner")
-        hot_cov = cover.join(cs_df, on="cell", how="inner")
-        cold_cov = cover.join(cs_df.select("cell"), on="cell",
-                              how="left_anti")
-        expl = ("explode(sequence(CAST(0 AS BIGINT), "
-                "CAST(cs_n - 1 AS BIGINT))) AS csplit")
-        if s2mode == "qid":
-            # cover hashes by qid (pre-rank groups unchanged); hot
-            # points replicate cs_n times into the stage-2 exchange
-            hot_cov = hot_cov.selectExpr(
-                "cell", *ccols,
-                "pmod(xxhash64(qid), CAST(cs_n AS BIGINT)) AS csplit")
-            hot_pts = hot_pts.selectExpr(*pcols, expl)
-        else:  # "doc": no point replication; cover replicates cs_n x
-            hot_pts = hot_pts.selectExpr(
-                *pcols,
-                "pmod(xxhash64(doc_key), CAST(cs_n AS BIGINT)) "
-                "AS csplit")
-            hot_cov = hot_cov.selectExpr("cell", *ccols, expl)
-        pre = probe(pts2, cold_cov, keys).unionByName(
-            probe(hot_pts, hot_cov, jkeys))
-    else:
-        pre = probe(pts2, cover, keys)
-    boundary = (pre.withColumn("rnk", F.row_number().over(w))
-                .where(F.col("rnk") <= k)
-                .select("qid", "doc_key", "dist2", "rnk"))
+    def tiles(c: str, cells: int, world: int, lo: str, hi: str,
+              t: int) -> tuple[str, str]:
+        m0 = f"greatest({lo}, ({c} * {world} + {cells - 1}) div {cells})"
+        m1 = (f"least({hi}, (({c} + 1) * {world} + {cells - 1}) "
+              f"div {cells} - 1)")
+        return f"(({m0}) * {t}) div {world}", f"(({m1}) * {t}) div {world}"
 
-    return done.unionByName(boundary), persisted
+    i0, i1 = tiles(cx, C.CELL_CX, C.WORLD_MX, "xmin", "xmax", _TX)
+    j0, j1 = tiles(cy, C.CELL_CY, C.WORLD_MY, "ymin", "ymax", _TY)
+    return cover_cells(bq).join(
+        F.broadcast(sat), on=F.expr(f"{_box_count(i0, i1, j0, j1)} > 0"),
+        how="left_semi")
 
 
 # ~24 B/row: (cell, doc_key) int64 + mx/my int32 in the serialized slim
@@ -537,9 +212,9 @@ def _warn_if_cache_exceeds_storage(spark, total_rows: int) -> bool:
     eviction (even to tmpfs disk) was MEASURED at +29% on the 4N join
     wall (240.4 vs 188.2 s, 8 GiB executors, certified clean windows —
     bench_records/r6_knn_floor_4n_evlog.jsonl).  Warning only, no
-    behavior change; returns whether it fired (for tests).  The driver
-    histogram the eager path already collects supplies total_rows, so
-    the check is free."""
+    behavior change; returns whether it fired (for tests).  The SAT the
+    eager path already builds supplies total_rows, so the check is
+    free."""
     est = total_rows * _SLIM_CACHE_BYTES_PER_ROW
     try:
         vals = (spark.sparkContext._jsc.sc()
@@ -564,20 +239,14 @@ def _warn_if_cache_exceeds_storage(spark, total_rows: int) -> bool:
     return True
 
 
-def _bc_gates(spark, queries: DataFrame, eff_salt: int,
-              flag: bool | None) -> tuple[bool, bool]:
-    """Resolve the ring / stage-2-cover broadcast decisions: explicit
-    flag wins; None size-gates the optimizer's estimate of the query
-    side times the multicast fan-out (ring 9, cover ~64) TIMES the
-    effective salt replication, against the session threshold — no job
-    runs (see spatialgraft.broadcast for why plan stats, not a count)."""
-    if flag is not None:
-        return flag, flag
-    from ..broadcast import plan_size_bytes, threshold_bytes
-    thr = threshold_bytes(spark)
-    est = plan_size_bytes(queries) if thr > 0 else 1 << 62
-    return (thr > 0 and est * 9 * eff_salt <= thr,
-            thr > 0 and est * 64 * eff_salt <= thr)
+def _bc_cover(queries: DataFrame, eff_salt: int, flag: bool | None
+              ) -> bool:
+    """Resolve the cover broadcast decision: explicit flag wins; None
+    size-gates the optimizer's estimate of the query side times the
+    cover fan-out TIMES the effective salt replication, against the
+    session threshold — no job runs (see spatialgraft.broadcast)."""
+    from ..broadcast import decide
+    return decide(queries, flag, _COVER_FANOUT * eff_salt)
 
 
 def knn_join(points: DataFrame, queries: DataFrame, k: int = C.DEFAULT_K,
@@ -586,120 +255,67 @@ def knn_join(points: DataFrame, queries: DataFrame, k: int = C.DEFAULT_K,
              plan=None,
              salt: int | None = None,
              materialize: bool = False,
-             cache_input: bool = True,
-             s2split: str | None = None,
-             s2split_thresh: int | None = None,
-             cache_sort: str | None = None,
-             persist_intermediates: bool | None = None) -> DataFrame:
+             cache_input: bool = True) -> DataFrame:
     """For every query point (qid, qmx, qmy, qx, qy): its k nearest data
     points.  Returns (qid, doc_key, dist2, rnk), rnk 1..k by
-    (dist2, doc_key).
+    (dist2, doc_key); a query gets min(k, n) rows for n data points.
 
     pred: optional extra data-side predicate (knnFilter semantics, F6).
-    plan: optional SpatialPartitioning -> salt hot cells in stage 1 (J9).
+    plan: optional SpatialPartitioning -> the probe joins on
+    (cell, salt) with per-hot-cell split factors (J9).
     salt: uniform salt modulus (ignored when a plan is given): every
     cell splits into `salt` slices keyed by pmod(xxhash64(doc_key), salt)
-    and both join stages key on (cell, salt) — the plan-free J9 knob for
-    the ONE-dominating-cell regime.  It is a knob, not the default,
-    because it costs everywhere else: the multicast sides replicate
-    x salt, and the stage-1 pre-rank keeps k rows PER SLICE, feeding
-    salt-times the rows into the global rank — A/B-measured at 1.05B
-    docs as a large net LOSS on uniformly dense data (4N knn wall
-    139.7 -> 268.0 s at salt=8; bench_records/r5_ab4n_x2304.jsonl).
-    Prefer plan= (per-hot-cell split factors) when stats are available.
-    broadcast_queries: None = auto size-gate per join (ring fan-out 9,
-    stage-2 cover fan-out ~64) against the session broadcast threshold,
-    from the optimizer's plan-size estimate — no job runs.  True/False
-    force.
-    cache_sort: "cell" orders the slim projection within partitions by
-    the join keys before it is cached (None = the
-    SPARK_GRAFT_KNN_CACHE_SORT env default, config.py) — stage-2 probes
-    of one cell then touch contiguous cache pages (A/B candidate
-    against the measured 2.00x stage-2 CPI inflation at the bus-bound
-    4N gate, VERDICT r6 item 4).  Bit-exact either way: row order never
-    affects results (all ranks order explicitly by (dist2, doc_key)).
-    s2split / s2split_thresh: stage-2 hot-cell split (None = the
-    SPARK_GRAFT_KNN_S2SPLIT env defaults, config.py).  "doc" or "qid"
-    spreads the stage-2 probe of any cell holding more than
-    s2split_thresh rows over ceil(count/thresh) csplit sub-tasks
-    (capped at KNN_S2SPLIT_CAP), attacking the one-task-per-dense-cell
-    stage-2 straggler WITHOUT touching stage 1 (whose pre-rank-per-
-    slice blowup is why uniform salt lost the r5 A/B).  Bit-exact
-    either mode; eager path only (the map comes from the driver
-    histogram).  "doc" partitions hot points by doc_key hash (no point
-    replication, cover of hot cells replicated n times); "qid" hashes
-    the cover by qid (pre-rank groups unchanged, hot points replicated
-    n times).
+    — the plan-free J9 knob for the ONE-dominating-cell regime.  It is a
+    knob, not the default, because it costs everywhere else: the cover
+    replicates x salt and the pre-rank keeps k rows PER SLICE (the old
+    two-stage join measured 139.7 -> 268.0 s at salt=8 on 1.05B uniform
+    docs; bench_records/r5_ab4n_x2304.jsonl).
+    broadcast_queries: None = auto size-gate of the cover (fan-out ~64)
+    against the session broadcast threshold, from the optimizer's
+    plan-size estimate — no job runs.  True/False force.
 
     materialize=False (library default): plan construction is
     COMPLETELY lazy — no job runs, nothing is persisted, the returned
-    DataFrame is a pure composable plan.  The cell histogram and the
-    SAT become part of the plan (a lazy per-cell aggregate + a dense
-    O(#cells) prefix grid joined at 4 corners per lookup), the stage-1
-    density sampling is always compiled in (its filter is the identity
-    for sparse cells), and the `done` guard always carries the
-    conservative ring_sum test.  Each action recomputes the input
-    lineage — callers who iterate should persist their input or pass
-    materialize=True.
+    DataFrame is a pure composable plan.  The tile histogram and its SAT
+    are plan nodes (a lazy aggregate and a one-partition mapInArrow);
+    each action recomputes the input lineage — callers who iterate
+    should persist their input or pass materialize=True.
 
-    materialize=True (driver/bench path): the slim point projection is
-    cached (SERIALIZED level — deserialized object-graph caching was a
-    measured GC death spiral near the storage pool at 263M rows), the
-    histogram is collected once (O(#cells)) to build the SAT as a
-    driver array and to short-circuit sampling when no cell is dense,
-    the result is persisted and counted, and every intermediate is
-    unpersisted before returning.
+    materialize=True (driver/bench path): two actions.  The slim point
+    projection is cached (SERIALIZED level — deserialized object-graph
+    caching was a measured GC death spiral near the storage pool at
+    263M rows) while the tile histogram is collected (O(#tiles)); the
+    driver builds the SAT with numpy; the result is persisted and
+    counted, and the slim cache is unpersisted before returning.
 
     cache_input (materialize=True only): False skips the slim-
     projection cache, so the histogram job and the result job each
-    re-run the input lineage (shuffle files do NOT persist across
-    separate query executions — there is no cross-job exchange reuse).
-    A/B at the x2304 gate (1.05B rows, 4 GiB executors) measured the
-    cache WINNING despite its build being 57% of the N wall: uncached
-    walls were 139.7 -> 206.4 s at 4N and ~2x at N
-    (bench_records/r5_ab4n_x2304.jsonl).  Keep the default unless the
-    cache itself cannot fit executor storage+disk.  Executor SIZING
-    matters as much as the flag: when the slim cache does not fit the
-    aggregate heap, eviction (even to tmpfs disk) cost a measured
-    +29% on the join wall at the same gate (240.4 vs 188.2 s with
-    8 GiB executors, certified clean windows, r6_knn_floor_4n_evlog
-    .jsonl) — budget executor memory for the ~24 B/row slim cache
-    PLUS the working set of whatever shares the session.  The cache also
-    carries accurate InMemoryRelation stats — on exploded/generated
-    lineage whose static Catalyst estimate misses the multiplicity,
-    the uncached plan can auto-broadcast a huge side (the lazy-path
-    footnote below).
+    re-run the input lineage.  A/B at the x2304 gate (1.05B rows, 4 GiB
+    executors) measured the cache WINNING: uncached walls were 139.7 ->
+    206.4 s at 4N (bench_records/r5_ab4n_x2304.jsonl).  Executor SIZING
+    matters as much as the flag: eviction of a slim cache larger than
+    the aggregate heap cost a measured +29% on the join wall
+    (r6_knn_floor_4n_evlog.jsonl) — budget executor memory for the
+    ~24 B/row slim cache.  The cache also carries accurate
+    InMemoryRelation stats, which the lazy path lacks (next paragraph).
 
     Scale footnote (materialize=False on exploded/generated inputs):
     Catalyst's static sizeInBytes of an explode() does not model the
     multiplicity, so a billion-row generated side could be estimated
     under autoBroadcastJoinThreshold and planted as a broadcast build
-    — measured as a driver maxResultSize crash at x2304.  GUARDED
-    since r6: when the input lineage contains a Generate, the lazy
-    path plants merge (sort-merge) hints on the points side of both
-    stage joins, so Catalyst can never pick it as a broadcast build;
-    parquet-backed inputs (sound estimates) keep their unhinted plans
+    — measured as a driver maxResultSize crash at x2304.  When the
+    input lineage contains a Generate, the lazy path plants a merge
+    (sort-merge) hint on the points side of the probe join, so Catalyst
+    can never pick it as a broadcast build; parquet-backed inputs keep
+    their unhinted plans
     (tests/test_knn_paths.py::test_lazy_generated_input_never_broadcast).
     """
-    s2mode = (s2split if s2split is not None else C.KNN_S2SPLIT).lower()
-    if s2mode not in ("off", "doc", "qid"):
-        raise ValueError(f"s2split must be off|doc|qid, got {s2split!r}")
-    csort = (cache_sort if cache_sort is not None
-             else C.KNN_CACHE_SORT).lower()
-    if csort not in ("off", "cell"):
-        raise ValueError(
-            f"cache_sort must be off|cell, got {cache_sort!r}")
-    # eager-path intermediate persists (guide §5 A/B knob, config):
-    # False relies on AQE exchange reuse for the multi-consumer
-    # subtrees; bit-identical results either way
-    p_int = (C.KNN_PERSIST_INT if persist_intermediates is None
-             else bool(persist_intermediates))
+    if k < 1:
+        raise ValueError(f"knn_join needs k >= 1, got {k}")
     spark = points.sparkSession
-    # effective salt multiplier of the multicast sides: with salt=N (or
-    # a plan whose hottest cell splits N ways) the ring/cover rows are
-    # replicated a further N times by salt_explode, so the broadcast
-    # size gate must count it (ADVICE r5: a salted query side up to Nx
-    # over the threshold could still be force-broadcast)
+    # effective salt multiplier of the cover: with salt=N (or a plan
+    # whose hottest cell splits N ways) cover rows are replicated a
+    # further N times, so the broadcast size gate must count it
     if plan is not None:
         eff_salt = max((ns for _, ns in plan.assignment.values()),
                        default=1)
@@ -707,165 +323,107 @@ def knn_join(points: DataFrame, queries: DataFrame, k: int = C.DEFAULT_K,
         eff_salt = int(salt)
     else:
         eff_salt = 1
-    bc_ring, bc_cover = _bc_gates(spark, queries, eff_salt,
-                                  broadcast_queries)
+    bc_cover = _bc_cover(queries, eff_salt, broadcast_queries)
     if pred is not None:
         points = points.where(pred if isinstance(pred, Column)
                               else F.expr(pred))
 
-    # slim projection: feeds the cell histogram, stage 1 and stage 2
-    # (the spans column must not ride downstream).  It carries
-    # (cell, doc_key, mx:int, my:int) — 24 bytes/row instead of the 40+
-    # of a (cell, doc_key, x:double, y:double, salt) row: the doubles
-    # are recomputed bit-exactly from the milli ints (_X/_Y) and the
-    # salt column exists only when a skew plan asks for it.  At 10^12
-    # rows this is the join's one row-count-sized data stream — its
-    # width IS the memory-bus bill.
+    # slim projection: feeds the histogram and the probe (the spans
+    # column must not ride downstream).  It carries (cell, doc_key,
+    # mx:int, my:int) — 24 bytes/row: the doubles are recomputed
+    # bit-exactly from the milli ints (_X/_Y) and the salt column exists
+    # only when salting asks for it.  At 10^12 rows this is the join's
+    # one row-count-sized data stream — its width IS the memory-bus bill.
     pts = with_cell(points).select(
         "cell", "doc_key",
         F.col("mx").cast("int").alias("mx"),
         F.col("my").cast("int").alias("my"))
     keys = ["cell"]
-    salt_map = None
-    usalt = None
     if plan is not None:
         keys = ["cell", "salt"]
-        salt_map = F.broadcast(plan.to_df(spark))
-        pts = (pts.join(salt_map.select("cell", "nsplits"),
-                        on="cell", how="left")
+        salt_map = F.broadcast(plan.to_df(spark).select("cell", "nsplits"))
+        pts = (pts.join(salt_map, on="cell", how="left")
                .selectExpr(
                    "cell", "doc_key", "mx", "my",
                    "pmod(xxhash64(doc_key), "
                    "CAST(coalesce(nsplits, 1) AS BIGINT)) AS salt"))
     elif salt is not None and salt > 1:
         keys = ["cell", "salt"]
-        usalt = int(salt)
         pts = pts.selectExpr(
             "cell", "doc_key", "mx", "my",
-            f"pmod(xxhash64(doc_key), CAST({usalt} AS BIGINT)) AS salt")
-    # Repartition by (cell, salt) to the session shuffle width BEFORE
-    # stage 1: (a) partition count then scales with configuration, not
-    # core count — an input cached in defaultParallelism partitions made
-    # each stage-1 map task sort (candidates/cores) rows and OOM at 24x
-    # input on one executor; (b) hash(cell, salt) satisfies the
-    # pre-rank window's clustering, so both window sorts run in place
-    # with NO exchange of the candidate stream — the only full-data
-    # shuffle in the whole join is this one slim-projection shuffle.
+            f"pmod(xxhash64(doc_key), CAST({int(salt)} AS BIGINT)) AS salt")
+    # Repartition by (cell[, salt]) to the session shuffle width: the
+    # partition count scales with configuration, not core count, and
+    # hash(cell[, salt]) satisfies the pre-rank window's clustering, so
+    # it sorts in place with NO exchange of the candidate stream.
     n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
     pts = pts.repartition(n_parts, *keys)
-    # cache_sort="cell" (VERDICT r6 item 4): order the slim projection
-    # within partitions by the join keys before it is cached, so every
-    # stage-2 probe of one cell reads contiguous cache pages (an A/B
-    # candidate against the measured 2.00x stage-2 CPI inflation on the
-    # bus-bound 4N gate).  sortWithinPartitions preserves the hash
-    # partitioning, so the exchange-free window clustering is untouched
-    # and results are bit-identical (tests/test_knn_paths.py twin).
-    if csort == "cell":
-        pts = pts.sortWithinPartitions(*keys)
-    dense_thresh = 3 * k * C.KNN_SAMPLE_MOD
+    if materialize and cache_input:
+        pts = pts.persist(StorageLevel.MEMORY_AND_DISK)
+    hist = pts.selectExpr(f"{_TILE} AS tile").groupBy("tile").agg(
+        F.count("*").alias("cnt"))
 
+    smj_pts = False
     if not materialize:
-        # Scale guard (VERDICT r5 item 1): Catalyst's static sizeInBytes
-        # of a Generate (explode) node does not model the multiplicity,
-        # so a billion-row generated points side can be estimated under
-        # autoBroadcastJoinThreshold and planted as the BROADCAST BUILD
-        # of a stage join — measured as a driver maxResultSize CRASH at
-        # 1.05B rows (bench_records/r5_ab4n_x2304.jsonl, lazy_salt8
-        # note).  When the input lineage contains a Generate, force
-        # sort-merge on the points side of both stage joins (smj_pts);
-        # parquet-backed inputs (sound estimates) keep today's plans.
-        # The eager path needs no guard: its cache carries real
-        # InMemoryRelation stats and AQE re-plans from them.
+        # Scale guard (VERDICT r5 item 1, see the docstring footnote):
+        # generated lineage -> sort-merge on the points side.  The eager
+        # path needs no guard: its cache carries real InMemoryRelation
+        # stats and AQE re-plans from them.
         try:
             smj_pts = "Generate" in (points._jdf.queryExecution()
                                      .analyzed().toString())
         except Exception:
             smj_pts = True  # unknown lineage -> take the scale-safe side
-        # fully lazy: histogram, total, and SAT are all plan nodes
-        cell_counts = pts.groupBy("cell").agg(
-            F.count("*").alias("cellcnt"))
-        prefix = _dense_prefix(spark, cell_counts)
-        total_df = cell_counts.agg(
-            F.sum("cellcnt").alias("_total")).fillna({"_total": 0})
-        # `need` is a COLUMN here (least(k, total)): the 1-row total
-        # rides onto the expansion rows via a broadcast cross join
-        # planted by the strategy wrapper below
-        base_add = _ring_count_join(prefix)
+        sat = hist.coalesce(1).mapInArrow(_sat_partition,
+                                          "sat array<bigint>")
+    else:
+        h = hist.toArrow()
+        sat_np = _sat(h.column("tile").to_numpy(),
+                      h.column("cnt").to_numpy())
+        if cache_input:
+            _warn_if_cache_exceeds_storage(spark, int(sat_np[-1]))
+        sat = spark.createDataFrame(pa.table(
+            {"sat": pa.array([sat_np], pa.list_(pa.int64()))}))
 
-        def add_with_total(df, key_cols, out):
-            df2 = base_add(df, key_cols, out)
-            if out == "_rc":
-                df2 = df2.crossJoin(F.broadcast(total_df))
-            return df2
+    cover = _nonempty_cover(_bounded(queries, sat, k, n_parts), sat)
+    if len(keys) > 1:
+        # replicate each cover row across the salt slices of its cell,
+        # matching the data side's pmod(xxhash64(doc_key), n): every
+        # (point, query) pair meets on exactly one (cell, salt) key
+        if plan is not None:
+            cover = cover.join(salt_map, on="cell", how="left")
+            n = "coalesce(nsplits, 1)"
+        else:
+            n = str(int(salt))
+        cover = cover.selectExpr(
+            "cell", "qid", "qx", "qy", "kth2", "xmin", "xmax", "ymin",
+            "ymax",
+            f"explode(sequence(CAST(0 AS BIGINT), CAST({n} - 1 AS BIGINT)))"
+            " AS salt")
+    if bc_cover:
+        cover = F.broadcast(cover)
+    pts_probe = pts.hint("merge") if smj_pts else pts
 
-        need = F.least(F.lit(k).cast("long"), F.col("_total"))
-        # prune asymmetry vs the eager path (documented, ADVICE r5): the
-        # eager path gates the stage-2 presence prune on <50% grid
-        # occupancy because it is pure overhead on dense grids, but that
-        # signal is a driver-side histogram the lazy path by contract
-        # never collects (no job at construction time) — so the lazy
-        # plan carries the O(#cells) broadcast semi-join prune
-        # unconditionally.  Results are identical either way; callers
-        # on known-dense inputs who care should use materialize=True.
-        result, _ = _stages(
-            spark, pts, queries, k, keys, salt_map, bc_ring, bc_cover,
-            cell_counts, add_with_total, need,
-            sampling_guard=f"ring_sum < {dense_thresh} AND ",
-            sample_stage1=True, persist_intermediates=False,
-            prune_cells=cell_counts, usalt=usalt, smj_pts=smj_pts)
+    # probe: the int box prefilter before any double arithmetic, then
+    # the exact bound; projected to (keys, qid, doc_key, dist2) BEFORE
+    # the pre-rank, whose sort streams exactly these rows
+    wpre = Window.partitionBy(*keys, "qid").orderBy("dist2", "doc_key")
+    w = Window.partitionBy("qid").orderBy("dist2", "doc_key")
+    result = (pts_probe.join(cover, on=keys, how="inner")
+              .where("mx BETWEEN xmin AND xmax AND my BETWEEN ymin AND ymax")
+              .selectExpr(*keys, "qid", "doc_key", "kth2",
+                          f"{_D2} AS dist2")
+              .where("dist2 <= kth2")
+              .select(*keys, "qid", "doc_key", "dist2")
+              .withColumn("prnk", F.row_number().over(wpre))
+              .where(F.col("prnk") <= k)
+              .select("qid", "doc_key", "dist2")
+              .withColumn("rnk", F.row_number().over(w))
+              .where(F.col("rnk") <= k))
+    if not materialize:
         return result
-
-    # eager path: SER cache (see docstring), one O(#cells) collect.
-    # Without the cache the histogram job still runs the same map +
-    # O(#cells) agg; the result job re-runs the map once and its two
-    # probes (stage 1, stage 2) share that one exchange (ReuseExchange).
-    if cache_input:
-        pts = pts.persist(StorageLevel.MEMORY_AND_DISK)
-    hist = pts.groupBy("cell").agg(F.count("*").alias("cellcnt")).collect()
-    counts = {int(r["cell"]): int(r["cellcnt"]) for r in hist}
-    cell_counts = spark.createDataFrame(
-        [(c, n) for c, n in counts.items()] or [(0, 0)],
-        "cell bigint, cellcnt bigint")
-    sat_df = spark.createDataFrame([(_sat_rows(counts),)],
-                                   "sat array<bigint>")
-    total = sum(counts.values())
-    if cache_input:
-        _warn_if_cache_exceeds_storage(spark, total)
-    need = F.lit(min(k, total) if total else 0)
-    # short-circuit (free, from the driver-side histogram): when NO
-    # cell crosses the threshold stage 1 already sees the full data, so
-    # the histogram join + hash filter would keep every row — skip
-    # them, and the ring_sum sampling guard on `done` drops too.
-    any_dense = any(c >= dense_thresh for c in counts.values())
-    # stage-2 hot-cell split (config.KNN_S2SPLIT): derived from the
-    # driver histogram the eager path already holds, so building the
-    # {cell: nsplits} map is free.  Inactive when no cell crosses the
-    # threshold (e.g. all of sf0.1: max cell ~1k rows vs 500k default).
-    cover_split = None
-    if s2mode in ("doc", "qid"):
-        thr = (s2split_thresh if s2split_thresh is not None
-               else C.KNN_S2SPLIT_THRESH)
-        cover_split = {cell: min(C.KNN_S2SPLIT_CAP, -(-n // thr))
-                       for cell, n in counts.items() if n > thr} or None
-    result, persisted = _stages(
-        spark, pts, queries, k, keys, salt_map, bc_ring, bc_cover,
-        cell_counts, _ring_count_expr(sat_df), need,
-        sampling_guard=(f"ring_sum < {dense_thresh} AND "
-                        if any_dense else ""),
-        sample_stage1=any_dense, persist_intermediates=p_int,
-        # presence pruning drops cover rows in EMPTY cells, so its win
-        # is bounded by the empty fraction: on a dense grid (sf0.1 is
-        # ~70% occupied) the >1024-cell broadcast semi-join is pure
-        # overhead per call — prune only when at least half the grid is
-        # empty (the sparse regime X6 exists for)
-        prune_cells=(set(counts) if len(counts) < C.N_CELLS // 2
-                     else None),
-        expand=total > 0, usalt=usalt,
-        cover_split=cover_split, s2mode=s2mode)
     result = result.persist()
     result.count()
     if cache_input:
         pts.unpersist()
-    for df in persisted:
-        df.unpersist()
     return result

@@ -33,6 +33,18 @@ def _default_local_dir() -> str:
     return "/tmp"
 
 
+def _default_driver_mem() -> str:
+    """Half the machine's RAM, at most 48g.  In local mode every task
+    runs in the driver JVM, and with a heap ceiling above physical
+    memory G1 keeps growing the heap under allocation-heavy work until
+    the kernel OOM-kills the JVM (seen at ~15 GB RSS on a 15 GB host)."""
+    try:
+        ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (ValueError, OSError):
+        return "48g"
+    return f"{min(48 << 10, ram // 2 >> 20)}m"
+
+
 def get_spark(app: str = "spatialgraft",
               cpus: int | None = None,
               shuffle_partitions: int | None = None,
@@ -111,7 +123,8 @@ def get_spark(app: str = "spatialgraft",
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
         .config("spark.driver.memory",
-                os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+                os.environ.get("SPARK_GRAFT_DRIVER_MEM",
+                               _default_driver_mem()))
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )

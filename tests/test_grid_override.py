@@ -1,10 +1,11 @@
 """Non-power-of-two grid override (ADVICE r5, medium): the grid knobs
-SPARK_GRAFT_CELL_CX/_CY are deployment config; the kNN SAT ring-
-expansion radii must span ANY grid, not just power-of-two dims — under
-the old radii derivation a corner query on a 96x48 grid whose nearest
-data sat beyond cell radius 64 matched no expansion radius and was
-silently dropped (kNN returned < k rows).  Runs in a subprocess because
-the grid constants bind at module import."""
+SPARK_GRAFT_CELL_CX/_CY are deployment config, and kNN must stay exact
+under ANY join grid — including one that does not nest with the tile
+grid its SAT bound is built on.  The bound radii must reach across the
+whole tile grid: a corner query whose nearest data sits in the far
+corner must still find a box holding k points (an earlier radii
+derivation silently dropped such queries).  Runs in a subprocess
+because the grid constants bind at module import."""
 
 import os
 import subprocess
@@ -16,20 +17,18 @@ _INNER = textwrap.dedent('''
     assert os.environ["SPARK_GRAFT_CELL_CX"] == "96"
     from spatialgraft import config as C
     assert C.CELL_CX == 96 and C.CELL_CY == 48
-    from spatialgraft.ops.knn import _EXPAND_RADII
-    # the largest radius must reach the far edge of the grid
-    assert max(_EXPAND_RADII) >= max(C.CELL_CX, C.CELL_CY) - 1, \\
-        _EXPAND_RADII
+    from spatialgraft.ops.knn import _RADII
+    # the largest radius must reach the far edge of the tile grid
+    assert max(_RADII) >= max(C.TILE_TX, C.TILE_TY) - 1, _RADII
     from pyspark.sql import Window
     from pyspark.sql import functions as F
     from spatialgraft.ops.knn import knn_join
     from spatialgraft.session import get_spark
     spark = get_spark("grid-override", cpus=4)
     # 30 points clustered in the far corner (cell_x ~ 95), queries in
-    # the opposite corner (cell_x 0): every 3x3 ring is empty, so the
-    # SAT expansion must reach radius ~CELL_CX - 1 = 95 to satisfy the
-    # queries.  The old power-of-two radii cap (64 for a 96-wide grid)
-    # made these queries vanish.
+    # the opposite corner (cell_x 0): the SAT bound box must grow to
+    # nearly the whole world to hold k points, and the probe cover then
+    # spans almost every cell of the 96x48 grid.
     pts = spark.createDataFrame(
         [(i, 358000 + (i * 37) % 1500, 178000 + (i * 53) % 1500)
          for i in range(30)], "doc_key bigint, mx bigint, my bigint"
@@ -53,7 +52,7 @@ _INNER = textwrap.dedent('''
             .where("rnk <= 10").select("qid", "doc_key", "dist2", "rnk"))
     wv = sorted(map(tuple, want.collect()))
     assert sorted(map(tuple, got.collect())) == wv
-    # the lazy path walks the same expansion subtree
+    # the lazy path runs the same plan from its own SAT build
     lz = knn_join(pts, qs, k=10, materialize=False)
     assert sorted(map(tuple, lz.collect())) == wv
     spark.stop()
@@ -65,14 +64,11 @@ def test_env_override_validation():
     """Bad env overrides must fail loudly at import (ADVICE r5: the
     knobs were unvalidated) — a zero grid dimension breaks the div/pmod
     cell arithmetic silently, an oversized grid overruns the O(#cells)
-    driver structures, and an s2split typo would otherwise silently
-    disable the feature.  Config-free Python subprocesses (no Spark)."""
+    driver structures.  Config-free Python subprocesses (no Spark)."""
     cases = [
         ({"SPARK_GRAFT_CELL_CX": "0"}, "must be >= 1"),
         ({"SPARK_GRAFT_CELL_CX": "16384",
           "SPARK_GRAFT_CELL_CY": "16384"}, "2\\^26|2\\^26 cells|exceeds"),
-        ({"SPARK_GRAFT_KNN_S2SPLIT": "on"}, "off|doc|qid"),
-        ({"SPARK_GRAFT_KNN_S2SPLIT_CAP": "0"}, "must be >= 1"),
     ]
     import re
     for override, pat in cases:
@@ -85,19 +81,6 @@ def test_env_override_validation():
         assert r.returncode != 0, f"{override} was accepted"
         assert "ValueError" in r.stderr and re.search(pat, r.stderr), \
             (override, r.stderr[-500:])
-
-
-def test_knn_s2split_arg_validated(spark):
-    from spatialgraft.extract import with_geometry  # noqa: F401
-    import pytest
-    from spatialgraft import datagen
-    from spatialgraft.ops.knn import knn_join
-    pts = datagen.knn_queries(spark, "/root/testdata/sf0.001")
-    with pytest.raises(ValueError, match="off|doc|qid"):
-        # validation fires before any job; reuse the query table shape
-        knn_join(pts.selectExpr("qid AS doc_key", "qmx AS mx",
-                                "qmy AS my", "qx AS x", "qy AS y"),
-                 pts, k=3, materialize=True, s2split="both")
 
 
 def test_knn_under_non_power_of_two_grid():

@@ -1,7 +1,9 @@
-"""kNN scale paths: SAT ring expansion (no world cover), salted stage 1
-(J9), data-side predicate (F6), and the fewer-than-k-points edge —
-each checked bit-exactly against a brute-force cross-join twin."""
+"""One-pass kNN join: every path (lazy and eager, salted and planned
+(J9), data-side predicate (F6)) and every edge the synthetic tables
+never reach (k >= n, no points, one coordinate, world-edge queries) is
+checked bit-exactly against a brute-force cross-join twin."""
 
+import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
@@ -33,24 +35,19 @@ def _assert_same(got_df, want_df):
 
 
 def test_ring_expansion_matches_brute_force(spark, sf_smoke):
-    # sf0.001 is sparse over 32k cells: k=25 underfills most 3x3 rings,
-    # exercising the SAT expansion on nearly every query
+    # sf0.001 is sparse: k=25 pushes most queries' SAT bound box many
+    # tiles wide, so the probe spans many join cells
     pts = with_geometry(datagen.documents_spans(spark, sf_smoke))
     qs = datagen.knn_queries(spark, sf_smoke)
     _assert_same(knn_join(pts, qs, k=25), _brute(pts, qs, k=25))
 
 
 def test_eager_deep_expansion_matches_brute_force(spark, sf_smoke):
-    """EAGER-path deep SAT expansion vs brute force: k=150 at sf0.001
-    underfills every ring, so every query's stage-2 radius flows
-    through the eager expansion subtree (driver SAT array + explode-
-    radii pick).  The k150 contract query runs this exact path
-    (materialize=True); before r7 only the LAZY construction was
-    brute-force-gated at k=150.  Also the regression gate for any
-    future expansion rewrite — an r7 candidate (inline CASE-chain
-    radius pick) was measured 2x slower from lateral-alias expression
-    inlining and rejected (OPTIMIZATION_r07.md, bench_records/
-    r7_expandpick_ab_sf01.jsonl)."""
+    """EAGER-path deep SAT bound vs brute force: k=150 at sf0.001 makes
+    every query's bound box span a large part of the world, so the
+    driver-built SAT row, the radius pick and the wide cover all carry
+    real work.  The k150 contract query runs this exact path
+    (materialize=True)."""
     pts = with_geometry(datagen.documents_spans(spark, sf_smoke))
     qs = datagen.knn_queries(spark, sf_smoke)
     _assert_same(knn_join(pts, qs, k=150, materialize=True),
@@ -80,8 +77,8 @@ def test_salted_knn_identical_and_nonvacuous(spark, sf_correct):
 
 def test_uniform_salt_identical(spark, sf_correct):
     """knn_join(salt=N) — the plan-free skew knob — must be bit-exact
-    against the unsalted join in BOTH materialize modes (stage 1 AND
-    stage 2 key on (cell, salt) when salted)."""
+    against the unsalted join in BOTH materialize modes (the probe keys
+    on (cell, salt) when salted)."""
     pts = with_geometry(datagen.documents_spans(spark, sf_correct))
     qs = datagen.knn_queries(spark, sf_correct)
     base = knn_join(pts, qs, k=10)
@@ -92,49 +89,11 @@ def test_uniform_salt_identical(spark, sf_correct):
                           cache_input=False), base)
 
 
-def test_s2split_modes_identical_and_nonvacuous(spark, sf_correct):
-    """Stage-2 hot-cell split (VERDICT r5 item 2): both split shapes —
-    "doc" (hot points partitioned by doc_key hash, cover replicated)
-    and "qid" (cover hashed by qid, hot points replicated) — must be
-    bit-exact against the unsplit join.  thresh=3 makes nearly every
-    occupied cell "hot" at sf0.01 (median cell ~11 rows), so the split
-    branch carries almost all of the stage-2 probe (non-vacuous)."""
-    from spatialgraft import config as C
-    from spatialgraft.cells import with_cell
-    pts = with_geometry(datagen.documents_spans(spark, sf_correct))
-    qs = datagen.knn_queries(spark, sf_correct).limit(300)
-    # non-vacuity: the fixture must have cells over the test threshold
-    mx = (with_cell(pts.select("mx", "my")).groupBy("cell").count()
-          .agg(F.max("count")).collect()[0][0])
-    assert mx > 3 * C.KNN_S2SPLIT_CAP, "fixture too sparse to split"
-    base = knn_join(pts, qs, k=10, materialize=True)
-    for mode in ("doc", "qid"):
-        _assert_same(knn_join(pts, qs, k=10, materialize=True,
-                              s2split=mode, s2split_thresh=3), base)
-    # composes with the salted (cell, salt) stage keys
-    _assert_same(knn_join(pts, qs, k=10, materialize=True, salt=4,
-                          s2split="doc", s2split_thresh=3), base)
-
-
-def test_sampling_short_circuit_identical(spark, sf_smoke, monkeypatch):
-    # the same input answered through both stage-1 regimes — sampling
-    # forced on (threshold 0 via KNN_SAMPLE_MOD=1 -> every cell with
-    # >= 3k points samples) vs the driver-side short-circuit when no
-    # cell crosses the threshold — must be bit-identical
-    from spatialgraft import config as C
-    pts = with_geometry(datagen.documents_spans(spark, sf_smoke))
-    qs = datagen.knn_queries(spark, sf_smoke).limit(50)
-    fast = knn_join(pts, qs, k=3)
-    monkeypatch.setattr(C, "KNN_SAMPLE_MOD", 1)
-    sampled = knn_join(pts, qs, k=3)
-    _assert_same(sampled, fast)
-
-
 def test_k150_matches_brute_force(spark, sf_smoke, sf_correct):
     """Reference-scale k (its benchmarks run k up to 200,
-    reference README.md:51): k=150 exercises deep SAT expansion at
-    sf0.001 (most rings underfill) and the dense pre-rank/sampling
-    machinery at sf0.01 — both must stay bit-exact."""
+    reference README.md:51): k=150 exercises wide bound boxes at
+    sf0.001 and the dense per-cell pre-rank at sf0.01 — both must stay
+    bit-exact."""
     pts = with_geometry(datagen.documents_spans(spark, sf_smoke))
     qs = datagen.knn_queries(spark, sf_smoke)
     _assert_same(knn_join(pts, qs, k=150), _brute(pts, qs, k=150))
@@ -174,19 +133,20 @@ def test_lazy_construction_runs_no_jobs(spark, sf_smoke):
 
 
 def test_stage2_cover_prune_wired(spark, sf_smoke):
-    """VERDICT r4 item 6: the stage-2 cover is presence-pruned (X6 ->
-    J7).  Wiring check: the lazy plan carries the left-semi prune; the
-    quantitative headroom on the sparse sf0.001 fixture is large (most
-    of the 32k cells hold no data, so most world-cover multicast rows
-    die before the stage-2 shuffle).  Exactness of the pruned path is
-    covered by the brute-force twins above, which all run through it."""
+    """VERDICT r4 item 6: the probe cover is presence-pruned (X6 ->
+    J7).  Wiring check: the lazy plan carries the left-semi prune
+    against the SAT row; the quantitative headroom on the sparse sf0.001
+    fixture is large (most of the 32k cells hold no data, so most cover
+    rows of wide bound boxes die before the probe).  Exactness of the
+    pruned path is covered by the brute-force twins, which all run
+    through it."""
     from spatialgraft import config as C
     from spatialgraft.sfilter import presence_cells
     pts = with_geometry(datagen.documents_spans(spark, sf_smoke))
     qs = datagen.knn_queries(spark, sf_smoke)
     plan = (knn_join(pts, qs, k=25, materialize=False)
             ._jdf.queryExecution().optimizedPlan().toString())
-    assert "LeftSemi" in plan, "stage-2 cover prune not in lazy plan"
+    assert "LeftSemi" in plan, "cover prune not in lazy plan"
     present = presence_cells(pts)
     assert len(present) < 0.2 * C.N_CELLS, \
         "sf0.001 fixture unexpectedly dense; prune test is vacuous"
@@ -228,7 +188,8 @@ def test_lazy_generated_input_never_broadcast(spark, sf_smoke):
     plant a generated points side as a broadcast build (measured driver
     maxResultSize crash at 1.05B rows).  The lazy path must detect the
     Generate lineage and force sort-merge on the points side of both
-    stage joins — and must leave parquet-backed plans untouched."""
+    probe join (the only join the points side takes part in) — and
+    must leave parquet-backed plans untouched."""
     pts = with_geometry(datagen.documents_spans(spark, sf_smoke))
     big = (pts.withColumn("_r", F.explode(F.sequence(F.lit(0),
                                                      F.lit(49))))
@@ -237,8 +198,8 @@ def test_lazy_generated_input_never_broadcast(spark, sf_smoke):
     qs = datagen.knn_queries(spark, sf_smoke).limit(40)
     lazy = knn_join(big, qs, k=3, materialize=False)
     opt = lazy._jdf.queryExecution().optimizedPlan().toString()
-    assert opt.count("strategy=merge") >= 2, \
-        "guard did not hint both stage joins"
+    assert opt.count("strategy=merge") == 1, \
+        "guard did not hint the probe join"
     _assert_no_raw_generate_broadcast(
         lazy._jdf.queryExecution().executedPlan().toString())
     # parquet-backed input keeps today's unhinted plans
@@ -250,21 +211,19 @@ def test_lazy_generated_input_never_broadcast(spark, sf_smoke):
 
 
 def test_broadcast_gate_counts_salt(spark, sf_smoke):
-    """ADVICE r5: the ring/cover auto-broadcast gate must multiply the
+    """ADVICE r5: the cover auto-broadcast gate must multiply the
     fan-out by the effective salt replication of the multicast side."""
     from spatialgraft.broadcast import plan_size_bytes, threshold_bytes
-    from spatialgraft.ops.knn import _bc_gates
+    from spatialgraft.ops.knn import _COVER_FANOUT, _bc_cover
     qs = datagen.knn_queries(spark, sf_smoke)
     est, thr = plan_size_bytes(qs), threshold_bytes(spark)
-    assert 0 < est * 9 <= thr, "fixture: unsalted ring must fit"
-    ring1, _cover1 = _bc_gates(spark, qs, 1, None)
-    assert ring1
-    big_salt = int(thr // (est * 9) + 1)
-    ring_s, cover_s = _bc_gates(spark, qs, big_salt, None)
-    assert not ring_s and not cover_s
+    assert 0 < est * _COVER_FANOUT <= thr, "fixture: unsalted cover must fit"
+    assert _bc_cover(qs, 1, None)
+    big_salt = int(thr // (est * _COVER_FANOUT) + 1)
+    assert not _bc_cover(qs, big_salt, None)
     # explicit flags still win over the gate
-    assert _bc_gates(spark, qs, big_salt, True) == (True, True)
-    assert _bc_gates(spark, qs, 1, False) == (False, False)
+    assert _bc_cover(qs, big_salt, True) is True
+    assert _bc_cover(qs, 1, False) is False
 
 
 def test_cache_sizing_advisory(spark):
@@ -283,17 +242,150 @@ def test_cache_sizing_advisory(spark):
     assert any("slim cache" in str(x.message) for x in w)
 
 
-def test_cache_sort_bit_exact(spark, sf_smoke):
-    """cache_sort="cell" (VERDICT r6 item 4) only reorders rows inside
-    cache partitions — results must be bit-identical to the incumbent
-    in both the eager and lazy paths."""
+# --- one-pass twins on inputs the synthetic tables never reach ---------
+
+def _points(spark, rows):
+    """(doc_key, mx, my) triples -> a points side with the x/y doubles
+    derived exactly as extract.py derives them."""
+    return spark.createDataFrame(
+        rows, "doc_key bigint, mx bigint, my bigint").selectExpr(
+        "doc_key", "mx", "my",
+        "CAST(mx - 180000 AS DOUBLE) / 1000.0 AS x",
+        "CAST(my - 90000 AS DOUBLE) / 1000.0 AS y")
+
+
+def _queries(spark, rows):
+    return spark.createDataFrame(
+        rows, "qid bigint, qmx bigint, qmy bigint").selectExpr(
+        "qid", "qmx", "qmy",
+        "CAST(qmx - 180000 AS DOUBLE) / 1000.0 AS qx",
+        "CAST(qmy - 90000 AS DOUBLE) / 1000.0 AS qy")
+
+
+def _scatter(n, seed=1):
+    """n deterministic points spread over the whole world."""
+    return [(i, (i * 2654435761 + seed) % 360000,
+             (i * 2246822519 + 7 * seed) % 180000) for i in range(n)]
+
+
+def _twin(points, queries, k, **kw):
+    """Both materialize modes against brute force."""
+    want = _brute(points, queries, k)
+    for mat in (False, True):
+        _assert_same(knn_join(points, queries, k=k, materialize=mat,
+                              **kw), want)
+
+
+@pytest.mark.parametrize("k", [1, 10])
+def test_one_pass_matches_brute_force(spark, sf_smoke, k):
+    pts = with_geometry(datagen.documents_spans(spark, sf_smoke))
+    _twin(pts, datagen.knn_queries(spark, sf_smoke), k)
+
+
+def test_eager_pred_matches_filtered_brute_force(spark, sf_smoke):
     pts = with_geometry(datagen.documents_spans(spark, sf_smoke))
     qs = datagen.knn_queries(spark, sf_smoke)
-    base = (knn_join(pts, qs, k=5, materialize=True)
-            .toPandas().sort_values(["qid", "rnk"]).reset_index(drop=True))
-    srt = (knn_join(pts, qs, k=5, materialize=True, cache_sort="cell")
-           .toPandas().sort_values(["qid", "rnk"]).reset_index(drop=True))
-    assert base.equals(srt)
-    import pytest
-    with pytest.raises(ValueError, match="cache_sort"):
-        knn_join(pts, qs, k=5, cache_sort="bogus")
+    pred = "lower(text) LIKE '%flag r%'"
+    _assert_same(knn_join(pts, qs, k=5, pred=pred, materialize=True),
+                 _brute(pts, qs, k=5, pred=F.expr(pred)))
+
+
+def test_k_at_least_n(spark):
+    """k >= n: every query gets all n points, ranked."""
+    pts = _points(spark, _scatter(6))
+    qs = _queries(spark, [(0, 5, 5), (1, 200000, 100000),
+                          (2, 359999, 179999)])
+    for k in (6, 40):
+        _twin(pts, qs, k)
+
+
+def test_knn_rejects_bad_k(spark):
+    pts = _points(spark, _scatter(3))
+    with pytest.raises(ValueError, match="k >= 1"):
+        knn_join(pts, _queries(spark, [(0, 1, 1)]), k=0)
+
+
+def test_empty_points_side(spark):
+    pts = _points(spark, _scatter(20)).where("doc_key < 0")
+    qs = _queries(spark, [(0, 1000, 1000), (1, 359999, 0)])
+    for mat in (False, True):
+        got = knn_join(pts, qs, k=3, materialize=mat)
+        assert got.count() == 0
+        assert got.columns == ["qid", "doc_key", "dist2", "rnk"]
+
+
+def test_all_points_on_one_coordinate(spark):
+    """Every point in one tile and one cell: all distances tie per
+    query, so the (dist2, doc_key) canon alone decides the ranks."""
+    pts = _points(spark, [(i, 123456, 65432) for i in range(40)])
+    qs = _queries(spark, [(0, 123456, 65432), (1, 123000, 65000),
+                          (2, 0, 0), (3, 359999, 179999)])
+    for k in (1, 10):
+        _twin(pts, qs, k)
+
+
+def test_world_edge_queries(spark):
+    """Queries on all four world edges and corners: the bound box and
+    the probe cover clamp at 0 and WORLD-1 on every side."""
+    pts = _points(spark, _scatter(400, seed=3)
+                  + [(1000, 0, 0), (1001, 359999, 179999),
+                     (1002, 0, 179999), (1003, 359999, 0)])
+    edges = [(0, 0), (359999, 0), (0, 179999), (359999, 179999),
+             (0, 90000), (359999, 90000), (180000, 0), (180000, 179999)]
+    qs = _queries(spark, [(i, x, y) for i, (x, y) in enumerate(edges)])
+    for k in (1, 10, 150):
+        _twin(pts, qs, k)
+
+
+def test_salt_and_plan_match_brute_force(spark, sf_correct):
+    pts = with_geometry(datagen.documents_spans(spark, sf_correct))
+    qs = datagen.knn_queries(spark, sf_correct).limit(100)
+    plan = plan_partitions(pts.select("doc_key", "mx", "my"))
+    assert max(ns for _, ns in plan.assignment.values()) > 1, \
+        "skew fixture produced no salted cells"
+    want = _brute(pts, qs, k=10)
+    for mat in (False, True):
+        _assert_same(knn_join(pts, qs, k=10, salt=4, materialize=mat),
+                     want)
+        _assert_same(knn_join(pts, qs, k=10, plan=plan, materialize=mat),
+                     want)
+
+
+def _sql_execution_of(spark, job_ids):
+    """job id -> id of the SQL execution (one per action) that ran it."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    it = spark._jsparkSession.sharedState().statusStore() \
+        .executionsList().iterator()
+    out = {}
+    while it.hasNext():
+        e = it.next()
+        out.update({j: e.executionId() for j in job_ids
+                    if e.jobs().contains(j)})
+    return out
+
+
+def test_eager_runs_two_actions_and_leaves_only_result(spark, sf_smoke):
+    """materialize=True runs exactly two actions — the tile-histogram
+    collect and the result count — and every job it starts belongs to
+    one of them; nothing but the returned result stays persisted."""
+    pts = with_geometry(datagen.documents_spans(spark, sf_smoke))
+    qs = datagen.knn_queries(spark, sf_smoke)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    cached_before = sc._jsc.sc().getPersistentRDDs().size()
+    sc.setJobGroup("knn-guard", "eager knn_join")
+    try:
+        res = knn_join(pts, qs, k=10, materialize=True)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = tracker.getJobIdsForGroup("knn-guard")
+    assert jobs, "no job ran in the group"
+    execution_of = _sql_execution_of(spark, jobs)
+    assert set(execution_of) == set(jobs), "a job outside any action"
+    assert len(set(execution_of.values())) == 2
+    assert sc._jsc.sc().getPersistentRDDs().size() == cached_before + 1
+    assert res.is_cached
+    assert res.count() == 10 * qs.count()
+    res.unpersist()
+    assert sc._jsc.sc().getPersistentRDDs().size() == cached_before

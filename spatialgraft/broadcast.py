@@ -28,6 +28,8 @@ answer degrades to False = shuffle, the scale-safe side."""
 
 from __future__ import annotations
 
+import warnings
+
 from pyspark.sql import DataFrame
 
 _UNITS = {"b": 1, "k": 1 << 10, "kb": 1 << 10, "m": 1 << 20,
@@ -45,14 +47,27 @@ def threshold_bytes(spark) -> int:
     return int(raw)
 
 
+# set once the sizeInBytes fallback has warned in this process
+_fallback_warned = False
+
+
 def plan_size_bytes(side: DataFrame) -> int:
     """Catalyst's sizeInBytes estimate for the optimized plan — pure
     driver-side metadata, runs no job.  Falls back to a huge sentinel
-    (-> no broadcast) if the internal API ever changes shape."""
+    (-> no broadcast) if the internal API ever changes shape, and warns
+    once per process naming the exception: the fallback turns every
+    multicast join into a shuffled one."""
+    global _fallback_warned
     try:
         return int(side._jdf.queryExecution().optimizedPlan()
                    .stats().sizeInBytes())
-    except Exception:
+    except Exception as e:
+        if not _fallback_warned:
+            _fallback_warned = True
+            warnings.warn(
+                "spatialgraft.broadcast: the plan size estimate failed "
+                f"({type(e).__name__}: {e}); multicast query sides will "
+                "not be broadcast", RuntimeWarning, stacklevel=2)
         return 1 << 62
 
 

@@ -29,7 +29,19 @@ from pyspark.sql import functions as F
 
 from ..broadcast import decide as _decide_broadcast
 from ..cells import cover_cells, with_cell
+from ..config import HEX_OFFSETS
 from ..sqlgen import pip_concave_predicate, pip_predicate
+
+_VX = ", ".join(f"vx{i}" for i in range(len(HEX_OFFSETS)))
+_VY = ", ".join(f"vy{i}" for i in range(len(HEX_OFFSETS)))
+# A zero-area (collinear) polygon's half-plane tests are all 0 >= 0 for
+# every point on its line, so the convex refine also bounds the point by
+# the vertices' extent.  It reads only the vertex columns and runs after
+# the half-plane tests, so only matches pay it.  A bbox-column prefilter
+# widened every joined candidate row instead: ~10 % slower on cached
+# sf0.1 points, where this form measured level with no conjunct.
+_IN_VERTEX_EXTENT = (f"mx >= least({_VX}) AND mx <= greatest({_VX}) AND "
+                     f"my >= least({_VY}) AND my <= greatest({_VY})")
 
 
 def pip_join(points: DataFrame, polys: DataFrame,
@@ -43,7 +55,7 @@ def pip_join(points: DataFrame, polys: DataFrame,
     cover = cover_cells(polys)
     if bc:
         cover = F.broadcast(cover)
-    pred = pip_predicate("mx", "my")
+    pred = f"{pip_predicate('mx', 'my')} AND {_IN_VERTEX_EXTENT}"
     return (pts.join(cover, on="cell", how="inner")
             .where(F.expr(pred))
             .select("poly_id", "doc_key"))

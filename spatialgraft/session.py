@@ -126,6 +126,9 @@ def get_spark(app: str = "spatialgraft",
                 os.environ.get("SPARK_GRAFT_DRIVER_MEM",
                                _default_driver_mem()))
         .config("spark.ui.enabled", "false")
+        # workers skip the per-task re-read of unchanged zip archives
+        # (pyspark.zip); see spatialgraft/pydaemon.py
+        .config("spark.python.daemon.module", "spatialgraft.pydaemon")
         .getOrCreate()
     )
 

@@ -3,9 +3,12 @@ query side must plan as a BroadcastHashJoin; a huge synthetic query side
 must NOT be force-broadcast (it shuffles; AQE may still convert at
 runtime from real stats, which is the desired behavior at scale)."""
 
+import warnings
+
+import pytest
 from pyspark.sql import functions as F
 
-from spatialgraft import datagen
+from spatialgraft import broadcast, datagen
 from spatialgraft.broadcast import decide, threshold_bytes
 from spatialgraft.extract import with_geometry
 from spatialgraft.ops.range import range_join_count
@@ -51,3 +54,26 @@ def test_decide_math(spark):
     # explicit flags always win
     assert decide(big, True, fanout=64) is True
     assert decide(small, False, fanout=64) is False
+
+
+class _SideWithoutPlan:
+    """A query side whose py4j handle raises, as if the internal plan
+    API changed shape."""
+
+    def __init__(self, spark):
+        self.sparkSession = spark
+
+    @property
+    def _jdf(self):
+        raise AttributeError("no _jdf on this side")
+
+
+def test_plan_size_fallback_warns_once(spark, monkeypatch):
+    monkeypatch.setattr(broadcast, "_fallback_warned", False)
+    side = _SideWithoutPlan(spark)
+    with pytest.warns(RuntimeWarning,
+                      match="AttributeError: no _jdf on this side"):
+        assert decide(side, None, fanout=64) is False
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        assert decide(side, None, fanout=64) is False

@@ -228,17 +228,14 @@ def run_scaling_workload(sf_dir: str, n_executors: int,
 
     # Warm codegen/JIT for every operator shape on the un-replicated
     # input so the measured region contains only real work.  The warmup
-    # must use the same salt AND cache/lazy shape as the measured run
-    # (each is a different plan whose codegen the warmup exists to
-    # compile — ADVICE r5: warming materialize=True while measuring the
-    # lazy variant biased the recorded walls against it).
-    knn_salt = int(os.environ.get("SPARK_GRAFT_KNN_SALT", "0")) or None
-    knn_cache = os.environ.get("SPARK_GRAFT_KNN_CACHE", "1") == "1"
+    # must use the same lazy/eager shape as the measured run (each is a
+    # different plan whose codegen the warmup exists to compile — ADVICE
+    # r5: warming materialize=True while measuring the lazy variant
+    # biased the recorded walls against it).
     knn_lazy = os.environ.get("SPARK_GRAFT_KNN_LAZY", "0") == "1"
     base = with_geometry(datagen.documents_spans(spark, sf_dir))
     pip_join_count(base, polys).count()
-    knn_join(base, qs, k=10, salt=knn_salt, cache_input=knn_cache,
-             materialize=not knn_lazy).count()
+    knn_join(base, qs, k=10, materialize=not knn_lazy).count()
 
     # The queries run SEQUENTIALLY by default (SPARK_GRAFT_SCALE_CONC=1
     # restores the round-2 concurrent-threads protocol).  Measured this
@@ -253,8 +250,8 @@ def run_scaling_workload(sf_dir: str, n_executors: int,
     # BASELINE metric ("kNN-join + PIP-join throughput").
     # broadcast_queries=False: at this input scale the replicated ring
     # would be collected+built+shipped by the driver (serial seconds);
-    # the cached points are already hash-partitioned by (cell, salt),
-    # so a shuffled join moves only the small ring side — parallel.
+    # the cached points are already hash-partitioned by cell, so a
+    # shuffled join moves only the small ring side — parallel.
     # SPARK_GRAFT_SCALE_OPS selects operators (default both) so the
     # gate can also be decomposed per operator.
     ops = os.environ.get("SPARK_GRAFT_SCALE_OPS", "pip,knn").split(",")
@@ -269,20 +266,17 @@ def run_scaling_workload(sf_dir: str, n_executors: int,
     # input misses the x2304 multiplicity, auto-broadcasts the 1.05B-
     # row side, dies on driver maxResultSize; the eager cache is what
     # prevents that — InMemoryRelation carries real stats).  salt=8
-    # loses because the per-(cell,salt,qid) pre-rank keeps k rows PER
+    # lost because the per-(cell,salt,qid) pre-rank keeps k rows PER
     # SLICE, feeding 8x the rows into the global rank (stage-1 went
     # 6.6 -> 103 s at 4N) — far more than the ~30 s stage-2 straggler
-    # it removes.  The knobs remain for their legitimate regimes
-    # (salt: one dominating cell; cache off: cache-OOM-constrained
-    # executors) and for re-measurement on other hardware.
-    # (knn_cache / knn_lazy are read above, before the warmup, so the
-    # warmup compiles the same plan shape the measurement runs.)
+    # it removes.  Both losing knobs (uniform salt, cache off) are gone
+    # from the engine; only the lazy shape stays selectable.
+    # (knn_lazy is read above, before the warmup, so the warmup
+    # compiles the same plan shape the measurement runs.)
     all_thunks = {
         "pip": lambda: pip_join_count(points(), polys).count(),
         "knn": lambda: knn_join(points(), qs, k=10,
                                 broadcast_queries=False,
-                                salt=knn_salt,
-                                cache_input=knn_cache,
                                 materialize=not knn_lazy).count(),
         # range is memory-bandwidth-bound (35-billion-pair probe
         # stream); kept out of the default gate workload (see
@@ -329,14 +323,7 @@ def run_scaling_workload(sf_dir: str, n_executors: int,
             "wall_sec": round(wall, 2),
             "docs_per_sec": round(len(thunks) * n_docs / wall, 1),
             "n_docs": int(n_docs), "ops": ops, "qrep": qrep,
-            "knn_salt": knn_salt, "knn_cache_input": knn_cache,
             "knn_lazy": knn_lazy,
-            # stage-2 hot-cell split (config.KNN_S2SPLIT; the knn_join
-            # call reads the env defaults, recorded here for the A/B)
-            "knn_s2split": os.environ.get("SPARK_GRAFT_KNN_S2SPLIT",
-                                          "off"),
-            "knn_s2split_thresh": os.environ.get(
-                "SPARK_GRAFT_KNN_S2SPLIT_THRESH", "500000"),
             "rdd_compress": os.environ.get("SPARK_GRAFT_RDD_COMPRESS",
                                            "false"),
             "op_walls": op_walls or None,

@@ -9,6 +9,9 @@ a Catalyst column expression (whole-stage codegen, no UDF):
   cell_x = mx * CX div WORLD_MX      (exact integer floor)
   cell   = cell_x * CY + cell_y
   cover(box) = explode(x-range) x explode(y-range)
+  cover_join  = with_cell(points) JOIN cover(queries) ON cell, then an
+                exact refine — the one shape every multicast operator
+                (range, intersects, PIP, skew-salted J8) runs
 """
 
 from __future__ import annotations
@@ -17,6 +20,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from . import config as C
+from .broadcast import decide
 
 
 def cell_expr(mx: str = "mx", my: str = "my",
@@ -61,22 +65,69 @@ def zorder_expr(mx: str = "mx", my: str = "my") -> Column:
 def cover_cells(boxes: DataFrame,
                 xmin: str = "xmin", ymin: str = "ymin",
                 xmax: str = "xmax", ymax: str = "ymax",
-                out: str = "cell") -> DataFrame:
+                out: str = "cell",
+                cx: int = C.CELL_CX, cy: int = C.CELL_CY) -> DataFrame:
     """One output row per (box, overlapped cell) — the multicast step.
 
     Cell ranges are computed with the same exact integer floor as point
-    assignment, so a border-inclusive containment can never fall outside
-    the cover.
+    assignment (cell_expr on the same cx x cy grid), so a
+    border-inclusive containment can never fall outside the cover.
     """
-    cx0 = F.expr(f"({xmin} * {C.CELL_CX}) div {C.WORLD_MX}")
-    cx1 = F.expr(f"({xmax} * {C.CELL_CX}) div {C.WORLD_MX}")
-    cy0 = F.expr(f"({ymin} * {C.CELL_CY}) div {C.WORLD_MY}")
-    cy1 = F.expr(f"({ymax} * {C.CELL_CY}) div {C.WORLD_MY}")
+    cx0 = F.expr(f"({xmin} * {cx}) div {C.WORLD_MX}")
+    cx1 = F.expr(f"({xmax} * {cx}) div {C.WORLD_MX}")
+    cy0 = F.expr(f"({ymin} * {cy}) div {C.WORLD_MY}")
+    cy1 = F.expr(f"({ymax} * {cy}) div {C.WORLD_MY}")
     return (boxes
             .withColumn("_cx", F.explode(F.sequence(cx0, cx1)))
             .withColumn("_cy", F.explode(F.sequence(cy0, cy1)))
-            .withColumn(out, F.col("_cx") * C.CELL_CY + F.col("_cy"))
+            .withColumn(out, F.col("_cx") * cy + F.col("_cy"))
             .drop("_cx", "_cy"))
+
+
+# a query box covers <= ~64 cells at the join cell level: the fan-out
+# the broadcast gate multiplies the query side's size estimate by
+COVER_FANOUT = 64
+
+
+def multicast(queries: DataFrame, flag: bool | None, plan=None,
+              presence: set[int] | None = None) -> DataFrame:
+    """The query side of a cover join: one row per (query, covered
+    cell[, salt]), with a broadcast hint when `flag` says so (None =
+    size-gate the query side x COVER_FANOUT x the plan's hottest split,
+    spatialgraft.broadcast.decide — no job runs).
+
+    `plan`: a SpatialPartitioning — each cover row is replicated per
+    salt slice of its cell (partitioner.salt_cover).
+    `presence`: an sFilter cell-presence set — cover rows whose cell
+    holds no data are dropped before the shuffle (sfilter.prune_cover)."""
+    from .partitioner import max_splits, salt_cover
+    bc = decide(queries, flag, COVER_FANOUT * max_splits(plan))
+    cover = cover_cells(queries)
+    if presence is not None:
+        from .sfilter import prune_cover
+        cover = prune_cover(cover, presence)
+    if plan is not None:
+        cover = salt_cover(cover, plan)
+    return F.broadcast(cover) if bc else cover
+
+
+def cover_join(points: DataFrame, queries: DataFrame, flag: bool | None,
+               refine: str, plan=None,
+               presence: set[int] | None = None) -> DataFrame:
+    """The engine's one multicast join: points (mx, my) carry their
+    cell, each query multicasts to the cells its bbox (xmin..ymax)
+    covers, the two hash-join on `cell` (on (cell, salt) with a skew
+    `plan`), and the exact `refine` predicate keeps the true pairs.
+
+    Pairs are unique by construction: a point belongs to one cell (and
+    one salt slice), and a query's cover lists each (cell, salt) once."""
+    pts = with_cell(points)
+    keys = ["cell"]
+    if plan is not None:
+        from .partitioner import salt_points
+        pts, keys = salt_points(pts, plan), ["cell", "salt"]
+    cover = multicast(queries, flag, plan, presence)
+    return pts.join(cover, on=keys, how="inner").where(F.expr(refine))
 
 
 def zorder_int(cell: int, cx_bits: int = CX_BITS,

@@ -35,10 +35,14 @@ The eager and lazy paths run this same plan; they differ only in where
 the SAT row comes from (a driver-side numpy build from one collected
 histogram, or the same numpy build inside a one-partition mapInArrow).
 
-Skew (J9): pass a SpatialPartitioning `plan` (or a uniform `salt`) and
-the probe joins on (cell, salt) — the data side hashes hot cells into
-`nsplits` salt slices, the cover replicates across them (the reference
+Skew (J9): pass a SpatialPartitioning `plan` and the probe joins on
+(cell, salt) — the data side hashes hot cells into `nsplits` salt
+slices, the cover replicates across them (partitioner.salt_points /
+salt_cover, the same rule as the salted range join J8; the reference
 salts skewed partitions inside kNN round 2, knnJoinRDD.scala:120-215).
+Only hot cells split: a uniform salt on every cell lost its gate A/B
+(139.7 -> 268.0 s with 8 slices per cell, r5_ab4n_x2304.jsonl in
+bench_records/), because the pre-rank keeps k rows per slice.
 
 Predicates (F6): `pred` restricts the data side before the histogram —
 the reference's `knnFilter(entry, k, z)` z-predicate
@@ -50,6 +54,8 @@ shape as the DuckDB oracle -> bit-exact.
 
 from __future__ import annotations
 
+import warnings
+
 import numpy as np
 import pyarrow as pa
 from pyspark import StorageLevel
@@ -57,7 +63,10 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from .. import config as C
-from ..cells import cover_cells, with_cell
+from ..broadcast import decide
+from ..cells import COVER_FANOUT, cover_cells, with_cell
+from ..partitioner import max_splits, salt_cover, salt_points
+from .tiles import tile_expr
 
 # x/y are recomputed inline from the int milli coords with the exact
 # expression shape of extract.py:65 (int subtract -> cast -> /1000.0),
@@ -68,8 +77,6 @@ _Y = "(CAST(my - 90000 AS DOUBLE) / 1000.0)"
 _D2 = (f"(qx - {_X}) * (qx - {_X}) + (qy - {_Y}) * (qy - {_Y})")
 
 _TX, _TY = C.TILE_TX, C.TILE_TY
-_TILE = (f"((mx * {_TX}) div {C.WORLD_MX}) * {_TY} "
-         f"+ ((my * {_TY}) div {C.WORLD_MY})")
 
 # candidate bound radii (tiles): 0, then 2^i and 3*2^i, so the picked
 # box is at most 1.5x wider than the smallest that suffices.  The last
@@ -78,9 +85,6 @@ _TILE = (f"((mx * {_TX}) div {C.WORLD_MX}) * {_TY} "
 _REACH = 1 << (max(_TX, _TY) - 1).bit_length()
 _RADII = sorted({0} | {r for i in range(_REACH.bit_length())
                        for r in (1 << i, 3 << i) if r <= _REACH})
-
-# multicast fan-out the broadcast gate assumes per query (cover cells)
-_COVER_FANOUT = 64
 
 
 def _sat(tile: np.ndarray, cnt: np.ndarray) -> np.ndarray:
@@ -226,36 +230,47 @@ def _warn_if_cache_exceeds_storage(spark, total_rows: int) -> bool:
         return False
     if agg <= 0 or est <= agg:
         return False
-    import warnings
     warnings.warn(
-        f"knn_join cache_input: estimated slim cache "
+        f"knn_join: estimated slim cache "
         f"({est / 1e9:.1f} GB for {total_rows} rows at "
         f"{_SLIM_CACHE_BYTES_PER_ROW} B/row) exceeds aggregate executor "
         f"storage capacity ({agg / 1e9:.1f} GB); eviction cost a "
         "measured +29% on the join wall at the 1.05B-row gate "
         "(bench_records/r6_knn_floor_4n_evlog.jsonl) — size executor "
-        "memory for the cache or pass cache_input=False",
+        "memory for the cache",
         stacklevel=3)
     return True
 
 
-def _bc_cover(queries: DataFrame, eff_salt: int, flag: bool | None
-              ) -> bool:
-    """Resolve the cover broadcast decision: explicit flag wins; None
-    size-gates the optimizer's estimate of the query side times the
-    cover fan-out TIMES the effective salt replication, against the
-    session threshold — no job runs (see spatialgraft.broadcast)."""
-    from ..broadcast import decide
-    return decide(queries, flag, _COVER_FANOUT * eff_salt)
+# set once the lineage check below has warned in this process
+_lineage_warned = False
+
+
+def _has_generate(points: DataFrame) -> bool:
+    """Whether the analyzed lineage of `points` contains a Generate (an
+    explode), whose output Catalyst's static size estimate does not
+    model.  Falls back to True (-> the scale-safe sort-merge hint) if
+    the internal API ever changes shape, and warns once per process
+    naming the exception: the fallback changes the probe join's plan."""
+    global _lineage_warned
+    try:
+        return "Generate" in (points._jdf.queryExecution()
+                              .analyzed().toString())
+    except Exception as e:
+        if not _lineage_warned:
+            _lineage_warned = True
+            warnings.warn(
+                "spatialgraft.ops.knn: the lineage check failed "
+                f"({type(e).__name__}: {e}); lazy kNN probe joins take "
+                "the sort-merge hint", RuntimeWarning, stacklevel=3)
+        return True
 
 
 def knn_join(points: DataFrame, queries: DataFrame, k: int = C.DEFAULT_K,
              broadcast_queries: bool | None = None,
              pred: Column | str | None = None,
              plan=None,
-             salt: int | None = None,
-             materialize: bool = False,
-             cache_input: bool = True) -> DataFrame:
+             materialize: bool = False) -> DataFrame:
     """For every query point (qid, qmx, qmy, qx, qy): its k nearest data
     points.  Returns (qid, doc_key, dist2, rnk), rnk 1..k by
     (dist2, doc_key); a query gets min(k, n) rows for n data points.
@@ -263,16 +278,10 @@ def knn_join(points: DataFrame, queries: DataFrame, k: int = C.DEFAULT_K,
     pred: optional extra data-side predicate (knnFilter semantics, F6).
     plan: optional SpatialPartitioning -> the probe joins on
     (cell, salt) with per-hot-cell split factors (J9).
-    salt: uniform salt modulus (ignored when a plan is given): every
-    cell splits into `salt` slices keyed by pmod(xxhash64(doc_key), salt)
-    — the plan-free J9 knob for the ONE-dominating-cell regime.  It is a
-    knob, not the default, because it costs everywhere else: the cover
-    replicates x salt and the pre-rank keeps k rows PER SLICE (the old
-    two-stage join measured 139.7 -> 268.0 s at salt=8 on 1.05B uniform
-    docs; bench_records/r5_ab4n_x2304.jsonl).
-    broadcast_queries: None = auto size-gate of the cover (fan-out ~64)
-    against the session broadcast threshold, from the optimizer's
-    plan-size estimate — no job runs.  True/False force.
+    broadcast_queries: None = auto size-gate of the cover (fan-out ~64,
+    times the plan's hottest split) against the session broadcast
+    threshold, from the optimizer's plan-size estimate — no job runs.
+    True/False force.
 
     materialize=False (library default): plan construction is
     COMPLETELY lazy — no job runs, nothing is persisted, the returned
@@ -287,17 +296,15 @@ def knn_join(points: DataFrame, queries: DataFrame, k: int = C.DEFAULT_K,
     263M rows) while the tile histogram is collected (O(#tiles)); the
     driver builds the SAT with numpy; the result is persisted and
     counted, and the slim cache is unpersisted before returning.
-
-    cache_input (materialize=True only): False skips the slim-
-    projection cache, so the histogram job and the result job each
-    re-run the input lineage.  A/B at the x2304 gate (1.05B rows, 4 GiB
-    executors) measured the cache WINNING: uncached walls were 139.7 ->
-    206.4 s at 4N (bench_records/r5_ab4n_x2304.jsonl).  Executor SIZING
-    matters as much as the flag: eviction of a slim cache larger than
-    the aggregate heap cost a measured +29% on the join wall
-    (r6_knn_floor_4n_evlog.jsonl) — budget executor memory for the
-    ~24 B/row slim cache.  The cache also carries accurate
-    InMemoryRelation stats, which the lazy path lacks (next paragraph).
+    The cache is MEMORY_AND_DISK, so a cache larger than memory spills
+    to disk instead of failing, and it won its A/B at the x2304 gate
+    (1.05B rows, 4 GiB executors): uncached walls read 139.7 -> 206.4 s
+    at 4N (bench_records/r5_ab4n_x2304.jsonl).  Executor sizing still
+    matters: eviction of a slim cache larger than the aggregate heap
+    cost a measured +29% on the join wall (r6_knn_floor_4n_evlog.jsonl),
+    so a warning fires when the ~24 B/row estimate exceeds it.  The
+    cache also carries accurate InMemoryRelation stats, which the lazy
+    path lacks (next paragraph).
 
     Scale footnote (materialize=False on exploded/generated inputs):
     Catalyst's static sizeInBytes of an explode() does not model the
@@ -313,17 +320,10 @@ def knn_join(points: DataFrame, queries: DataFrame, k: int = C.DEFAULT_K,
     if k < 1:
         raise ValueError(f"knn_join needs k >= 1, got {k}")
     spark = points.sparkSession
-    # effective salt multiplier of the cover: with salt=N (or a plan
-    # whose hottest cell splits N ways) cover rows are replicated a
-    # further N times, so the broadcast size gate must count it
-    if plan is not None:
-        eff_salt = max((ns for _, ns in plan.assignment.values()),
-                       default=1)
-    elif salt is not None and salt > 1:
-        eff_salt = int(salt)
-    else:
-        eff_salt = 1
-    bc_cover = _bc_cover(queries, eff_salt, broadcast_queries)
+    # a salted cover replicates each row per salt slice of its cell, so
+    # the broadcast gate counts the hottest split
+    bc_cover = decide(queries, broadcast_queries,
+                      COVER_FANOUT * max_splits(plan))
     if pred is not None:
         points = points.where(pred if isinstance(pred, Column)
                               else F.expr(pred))
@@ -332,7 +332,7 @@ def knn_join(points: DataFrame, queries: DataFrame, k: int = C.DEFAULT_K,
     # column must not ride downstream).  It carries (cell, doc_key,
     # mx:int, my:int) — 24 bytes/row: the doubles are recomputed
     # bit-exactly from the milli ints (_X/_Y) and the salt column exists
-    # only when salting asks for it.  At 10^12 rows this is the join's
+    # only when a plan asks for it.  At 10^12 rows this is the join's
     # one row-count-sized data stream — its width IS the memory-bus bill.
     pts = with_cell(points).select(
         "cell", "doc_key",
@@ -341,26 +341,16 @@ def knn_join(points: DataFrame, queries: DataFrame, k: int = C.DEFAULT_K,
     keys = ["cell"]
     if plan is not None:
         keys = ["cell", "salt"]
-        salt_map = F.broadcast(plan.to_df(spark).select("cell", "nsplits"))
-        pts = (pts.join(salt_map, on="cell", how="left")
-               .selectExpr(
-                   "cell", "doc_key", "mx", "my",
-                   "pmod(xxhash64(doc_key), "
-                   "CAST(coalesce(nsplits, 1) AS BIGINT)) AS salt"))
-    elif salt is not None and salt > 1:
-        keys = ["cell", "salt"]
-        pts = pts.selectExpr(
-            "cell", "doc_key", "mx", "my",
-            f"pmod(xxhash64(doc_key), CAST({int(salt)} AS BIGINT)) AS salt")
+        pts = salt_points(pts, plan)
     # Repartition by (cell[, salt]) to the session shuffle width: the
     # partition count scales with configuration, not core count, and
     # hash(cell[, salt]) satisfies the pre-rank window's clustering, so
     # it sorts in place with NO exchange of the candidate stream.
     n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
     pts = pts.repartition(n_parts, *keys)
-    if materialize and cache_input:
+    if materialize:
         pts = pts.persist(StorageLevel.MEMORY_AND_DISK)
-    hist = pts.selectExpr(f"{_TILE} AS tile").groupBy("tile").agg(
+    hist = pts.select(tile_expr().alias("tile")).groupBy("tile").agg(
         F.count("*").alias("cnt"))
 
     smj_pts = False
@@ -369,37 +359,20 @@ def knn_join(points: DataFrame, queries: DataFrame, k: int = C.DEFAULT_K,
         # generated lineage -> sort-merge on the points side.  The eager
         # path needs no guard: its cache carries real InMemoryRelation
         # stats and AQE re-plans from them.
-        try:
-            smj_pts = "Generate" in (points._jdf.queryExecution()
-                                     .analyzed().toString())
-        except Exception:
-            smj_pts = True  # unknown lineage -> take the scale-safe side
+        smj_pts = _has_generate(points)
         sat = hist.coalesce(1).mapInArrow(_sat_partition,
                                           "sat array<bigint>")
     else:
         h = hist.toArrow()
         sat_np = _sat(h.column("tile").to_numpy(),
                       h.column("cnt").to_numpy())
-        if cache_input:
-            _warn_if_cache_exceeds_storage(spark, int(sat_np[-1]))
+        _warn_if_cache_exceeds_storage(spark, int(sat_np[-1]))
         sat = spark.createDataFrame(pa.table(
             {"sat": pa.array([sat_np], pa.list_(pa.int64()))}))
 
     cover = _nonempty_cover(_bounded(queries, sat, k, n_parts), sat)
-    if len(keys) > 1:
-        # replicate each cover row across the salt slices of its cell,
-        # matching the data side's pmod(xxhash64(doc_key), n): every
-        # (point, query) pair meets on exactly one (cell, salt) key
-        if plan is not None:
-            cover = cover.join(salt_map, on="cell", how="left")
-            n = "coalesce(nsplits, 1)"
-        else:
-            n = str(int(salt))
-        cover = cover.selectExpr(
-            "cell", "qid", "qx", "qy", "kth2", "xmin", "xmax", "ymin",
-            "ymax",
-            f"explode(sequence(CAST(0 AS BIGINT), CAST({n} - 1 AS BIGINT)))"
-            " AS salt")
+    if plan is not None:
+        cover = salt_cover(cover, plan)
     if bc_cover:
         cover = F.broadcast(cover)
     pts_probe = pts.hint("merge") if smj_pts else pts
@@ -424,6 +397,5 @@ def knn_join(points: DataFrame, queries: DataFrame, k: int = C.DEFAULT_K,
         return result
     result = result.persist()
     result.count()
-    if cache_input:
-        pts.unpersist()
+    pts.unpersist()
     return result

@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..cells import cell_expr, with_cell
+from .range import range_filter
 
 
 def multiget(points: DataFrame, keys: DataFrame,
@@ -75,10 +76,8 @@ def count_all(points: DataFrame) -> int:
 
 def count_in_box(points: DataFrame, xmin: int, ymin: int,
                  xmax: int, ymax: int) -> DataFrame:
-    return (points.where(
-        (F.col("mx") >= xmin) & (F.col("mx") <= xmax) &
-        (F.col("my") >= ymin) & (F.col("my") <= ymax))
-        .agg(F.count("*").alias("cnt")))
+    return (range_filter(points, xmin, ymin, xmax, ymax)
+            .agg(F.count("*").alias("cnt")))
 
 
 def cell_histogram(points: DataFrame) -> DataFrame:

@@ -27,10 +27,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..broadcast import decide as _decide_broadcast
-from ..cells import cover_cells, with_cell
+from ..cells import cover_join
 from ..config import HEX_OFFSETS
 from ..sqlgen import pip_concave_predicate, pip_predicate
+from .range import CONTAINS
 
 _VX = ", ".join(f"vx{i}" for i in range(len(HEX_OFFSETS)))
 _VY = ", ".join(f"vy{i}" for i in range(len(HEX_OFFSETS)))
@@ -50,14 +50,8 @@ def pip_join(points: DataFrame, polys: DataFrame,
 
     broadcast_polys None = auto size-gate on the polygon count
     (spatialgraft.broadcast.decide) — huge polygon sets shuffle."""
-    pts = with_cell(points)
-    bc = _decide_broadcast(polys, broadcast_polys, fanout=64)
-    cover = cover_cells(polys)
-    if bc:
-        cover = F.broadcast(cover)
     pred = f"{pip_predicate('mx', 'my')} AND {_IN_VERTEX_EXTENT}"
-    return (pts.join(cover, on="cell", how="inner")
-            .where(F.expr(pred))
+    return (cover_join(points, polys, broadcast_polys, pred)
             .select("poly_id", "doc_key"))
 
 
@@ -68,33 +62,23 @@ def pip_join_count(points: DataFrame, polys: DataFrame,
 
 
 def pip_join_concave(points: DataFrame, polys: DataFrame,
-                     broadcast_polys: bool | None = None,
-                     bbox_prefilter: bool = True) -> DataFrame:
+                     broadcast_polys: bool | None = None) -> DataFrame:
     """(poly_id, doc_key) pairs for ARBITRARY simple polygons given as
     vertex arrays (poly_id, vxs, vys, xmin, ymin, xmax, ymax) — exact
     int64 even-odd ray-cast, border-inclusive, concave-safe.
 
     Same cover/equi-join/refine shape as the convex path; only the
     refine predicate differs (O(#vertices) per candidate pair).  A
-    cheap codegen bbox conjunct runs BEFORE the interpreted ray-cast
-    HOF: cells are coarser than bboxes, so most cover candidates
-    short-circuit on four int compares instead of paying the
-    O(#vertices) edge walk — the same free pre-filter the convex path
-    gets from its first failing half-plane test.  bbox_prefilter=False
-    exists only to measure that effect (results are identical: the
-    bbox is a superset of the polygon, so the conjunct never drops a
-    contained point)."""
-    pts = with_cell(points)
-    bc = _decide_broadcast(polys, broadcast_polys, fanout=64)
-    cover = cover_cells(polys)
-    if bc:
-        cover = F.broadcast(cover)
-    j = pts.join(cover, on="cell", how="inner")
-    if bbox_prefilter:
-        j = j.where(F.expr(
-            "mx >= xmin AND mx <= xmax AND my >= ymin AND my <= ymax"))
+    cheap codegen bbox conjunct (range.CONTAINS) runs BEFORE the
+    interpreted ray-cast HOF: cells are coarser than bboxes, so most
+    cover candidates short-circuit on four int compares instead of
+    paying the O(#vertices) edge walk — the same free pre-filter the
+    convex path gets from its first failing half-plane test.  The bbox
+    is a superset of the polygon, so the conjunct never drops a
+    contained point."""
     pred = pip_concave_predicate("mx", "my", "vxs", "vys", "spark")
-    return (j.where(F.expr(pred))
+    return (cover_join(points, polys, broadcast_polys,
+                       f"{CONTAINS} AND ({pred})")
             .select("poly_id", "doc_key"))
 
 

@@ -3,12 +3,13 @@
 Spark-first realization of the reference's centerpiece joins
 (`sjoin` reference/src/main/scala/cs/purdue/edu/spatialrdd/SpatialRdd.scala:264-284,
 `rjoin` :298-322, `rangeFilter` :117-147):
-query boxes are multicast to their covering grid cells (cover_cells), the
-points side carries the same cell id, and Catalyst runs a hash equi-join on
-`cell` followed by an exact int64 refine predicate — the dual-tree local
-join (RTree.scala:185-300) collapses into join+filter with AQE handling
-skew at runtime.  Aggregation rides Catalyst's partial+final hash agg
-(replacing the hand-rolled flush at RTree.scala:315-356).
+query boxes are multicast to their covering grid cells, the points side
+carries the same cell id, and Catalyst runs a hash equi-join on `cell`
+followed by an exact int64 refine predicate (cells.cover_join) — the
+dual-tree local join (RTree.scala:185-300) collapses into join+filter
+with AQE handling skew at runtime.  Aggregation rides Catalyst's
+partial+final hash agg (replacing the hand-rolled flush at
+RTree.scala:315-356).
 """
 
 from __future__ import annotations
@@ -16,8 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..broadcast import decide as _decide_broadcast
-from ..cells import cover_cells, with_cell
+from ..cells import (COVER_FANOUT, cell_expr, cover_cells, cover_join,
+                     multicast)
 
 CONTAINS = ("mx >= xmin AND mx <= xmax AND "
             "my >= ymin AND my <= ymax")
@@ -28,8 +29,8 @@ CONTAINS = ("mx >= xmin AND mx <= xmax AND "
 # flag knowledge required.  Explicit True/False still force.
 _BROADCAST_DEFAULT: bool | None = None
 
-# a query box covers <= ~64 cells at the join cell level (cells.py)
-BOX_COVER_FANOUT = 64
+# the cover fan-out under its older name, which benchmark/layers.py reads
+BOX_COVER_FANOUT = COVER_FANOUT
 
 
 def _joined(points: DataFrame, boxes: DataFrame,
@@ -49,15 +50,8 @@ def _joined(points: DataFrame, boxes: DataFrame,
     if pred is not None:
         points = points.where(F.expr(pred) if isinstance(pred, str)
                               else pred)
-    pts = with_cell(points)
-    bc = _decide_broadcast(boxes, broadcast_queries, BOX_COVER_FANOUT)
-    cover = cover_cells(boxes)
-    if presence is not None:
-        from ..sfilter import prune_cover
-        cover = prune_cover(cover, presence)
-    if bc:
-        cover = F.broadcast(cover)
-    return pts.join(cover, on="cell", how="inner").where(F.expr(CONTAINS))
+    return cover_join(points, boxes, broadcast_queries, CONTAINS,
+                      presence=presence)
 
 
 def range_filter(points: DataFrame, xmin: int, ymin: int,
@@ -124,16 +118,11 @@ def intersects_join(dboxes: DataFrame, qboxes: DataFrame,
     reference-point rule (only the cell owning the intersection's
     lower-left corner reports it), so no distinct shuffle is needed —
     the standard dedup-free partitioned spatial-join shape."""
-    from ..cells import cell_expr
-
     d = cover_cells(dboxes.selectExpr(
         "dbox_id", "xmin AS d_xmin", "ymin AS d_ymin",
         "xmax AS d_xmax", "ymax AS d_ymax"),
         xmin="d_xmin", ymin="d_ymin", xmax="d_xmax", ymax="d_ymax")
-    bc = _decide_broadcast(qboxes, broadcast_queries, BOX_COVER_FANOUT)
-    q = cover_cells(qboxes)
-    if bc:
-        q = F.broadcast(q)
+    q = multicast(qboxes, broadcast_queries)
     refpt_cell = cell_expr("greatest(d_xmin, xmin)",
                            "greatest(d_ymin, ymin)")
     return (d.join(q, on="cell", how="inner")
@@ -151,25 +140,8 @@ def range_join_count_salted(points: DataFrame, boxes: DataFrame,
     `nsplits` salt slices: the data side hashes into one slice, the
     multicast query side replicates across all slices, and the join key
     becomes (cell, salt) — so no single reducer owns a whole hot cell
-    even when AQE's probe-side splitting isn't enough.  Results are
-    identical to range_join_count (tested)."""
-    from ..partitioner import SpatialPartitioning
-
-    assert isinstance(plan, SpatialPartitioning)
-    spark = points.sparkSession
-    m = F.broadcast(plan.to_df(spark))
-    pts = (with_cell(points)
-           .join(m, on="cell", how="left").fillna({"nsplits": 1})
-           .withColumn("salt", F.pmod(F.xxhash64("doc_key"),
-                                      F.col("nsplits"))))
-    cover = (cover_cells(boxes)
-             .join(m, on="cell", how="left").fillna({"nsplits": 1})
-             .withColumn("salt", F.explode(
-                 F.sequence(F.lit(0).cast("long"),
-                            (F.col("nsplits") - 1).cast("long")))))
-    j = (pts.select("cell", "salt", "mx", "my", "doc_key")
-         .join(cover.select("cell", "salt", "box_id",
-                            "xmin", "ymin", "xmax", "ymax"),
-               on=["cell", "salt"], how="inner")
-         .where(F.expr(CONTAINS)))
+    even when AQE's probe-side splitting isn't enough.  The cover takes
+    the usual broadcast gate, counting the hottest cell's replication.
+    Results are identical to range_join_count (tested)."""
+    j = cover_join(points, boxes, None, CONTAINS, plan=plan)
     return j.groupBy("box_id").agg(F.count("*").alias("cnt"))

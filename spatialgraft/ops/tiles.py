@@ -14,11 +14,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .. import config as C
+from ..cells import cell_expr, cover_cells
 
 
 def tile_expr(mx: str = "mx", my: str = "my") -> F.Column:
-    return F.expr(f"(({mx} * {C.TILE_TX}) div {C.WORLD_MX}) * {C.TILE_TY} "
-                  f"+ (({my} * {C.TILE_TY}) div {C.WORLD_MY})")
+    return cell_expr(mx, my, C.TILE_TX, C.TILE_TY)
 
 
 def assign_tiles_points(points: DataFrame) -> DataFrame:
@@ -27,16 +27,10 @@ def assign_tiles_points(points: DataFrame) -> DataFrame:
 
 
 def tiles_for_boxes(boxes: DataFrame, id_col: str = "box_id") -> DataFrame:
-    """raster->vector: one row per (id, overlapped tile)."""
-    tx0 = F.expr(f"(xmin * {C.TILE_TX}) div {C.WORLD_MX}")
-    tx1 = F.expr(f"(xmax * {C.TILE_TX}) div {C.WORLD_MX}")
-    ty0 = F.expr(f"(ymin * {C.TILE_TY}) div {C.WORLD_MY}")
-    ty1 = F.expr(f"(ymax * {C.TILE_TY}) div {C.WORLD_MY}")
-    return (boxes
-            .withColumn("_tx", F.explode(F.sequence(tx0, tx1)))
-            .withColumn("_ty", F.explode(F.sequence(ty0, ty1)))
-            .select(F.col(id_col),
-                    (F.col("_tx") * C.TILE_TY + F.col("_ty")).alias("tile")))
+    """raster->vector: one row per (id, overlapped tile) — the cell
+    cover on the tile grid."""
+    return (cover_cells(boxes, out="tile", cx=C.TILE_TX, cy=C.TILE_TY)
+            .select(id_col, "tile"))
 
 
 def tile_histogram(points: DataFrame) -> DataFrame:

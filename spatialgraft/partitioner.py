@@ -11,7 +11,9 @@ quadtree shipped in closures, we
      driver (locality-preserving, like the BFS leaf packing at
      QtreePartionner.scala:113-144),
   3. broadcast the cell -> (pid, nsplits) map back as a tiny DataFrame and
-     equi-join it on `cell`.
+     equi-join it on `cell`: salt_points on the data side and salt_cover
+     on the multicast side are the one salting rule every salted join
+     (range J8, kNN J9) uses.
 Hot cells (count > mean * SKEW_RATIO) get `nsplits > 1` salt values — the
 explicit analogue of the reference's skew-partition split
 (skewAnalysis.scala:145-160), needed because AQE only splits the probe side.
@@ -60,9 +62,6 @@ class SpatialPartitioning:
                 pass
             self._df = None
 
-    def pid_of(self, cell: int) -> int:
-        return self.assignment.get(int(cell), (0, 1))[0]
-
 
 def plan_partitions(points: DataFrame,
                     n_partitions: int = C.DEFAULT_PARTITIONS,
@@ -96,39 +95,37 @@ def plan_partitions(points: DataFrame,
     return SpatialPartitioning(assignment, n_partitions, total)
 
 
-def assign_pid(points: DataFrame, plan: SpatialPartitioning,
-               salt_col: str | None = "doc_key") -> DataFrame:
-    """Attach (pid, salted_pid) via a broadcast map join.
-
-    salted_pid spreads hot cells across `nsplits` partitions; the build
-    side of a join against salted data must replicate per salt
-    (see ops.knn stage 1)."""
-    spark = points.sparkSession
-    m = F.broadcast(plan.to_df(spark))
-    df = with_cell(points).join(m, on="cell", how="left").fillna(
-        {"pid": 0, "nsplits": 1})
-    if salt_col is None:
-        salt = F.lit(0)
-    else:
-        salt = F.pmod(F.xxhash64(F.col(salt_col)), F.col("nsplits"))
-    return df.withColumn(
-        "spid",
-        (F.col("pid").cast("long") * 4096 + salt).cast("long"))
+def max_splits(plan: SpatialPartitioning | None) -> int:
+    """The hottest cell's salt split count (1 without a plan): how many
+    times a salted cover replicates its worst cell, which the broadcast
+    gate of a salted multicast side must count."""
+    if plan is None:
+        return 1
+    return max((ns for _, ns in plan.assignment.values()), default=1)
 
 
-def replicate_per_salt(queries: DataFrame, plan: SpatialPartitioning
-                       ) -> DataFrame:
-    """Replicate each query row once per salt split of its cell, so a
-    salted-data join still sees every (query, data) pair exactly once."""
-    spark = queries.sparkSession
-    m = F.broadcast(plan.to_df(spark))
-    df = queries.join(m, on="cell", how="left").fillna(
-        {"pid": 0, "nsplits": 1})
-    return (df.withColumn(
-                "_salt",
-                F.explode(F.sequence(F.lit(0), F.col("nsplits") - 1)))
-              .withColumn(
-                "spid",
-                (F.col("pid").cast("long") * 4096 +
-                 F.col("_salt")).cast("long"))
-              .drop("_salt"))
+def _splits(df: DataFrame, plan: SpatialPartitioning) -> DataFrame:
+    m = F.broadcast(plan.to_df(df.sparkSession).select("cell", "nsplits"))
+    return df.join(m, on="cell", how="left")
+
+
+def salt_points(points: DataFrame, plan: SpatialPartitioning) -> DataFrame:
+    """Data side of a salted join: each (cell, doc_key) row gets its
+    salt slice pmod(xxhash64(doc_key), nsplits of its cell); cells
+    outside the plan have one slice."""
+    return (_splits(points, plan)
+            .withColumn("salt", F.expr(
+                "pmod(xxhash64(doc_key), "
+                "CAST(coalesce(nsplits, 1) AS BIGINT))"))
+            .drop("nsplits"))
+
+
+def salt_cover(cover: DataFrame, plan: SpatialPartitioning) -> DataFrame:
+    """Query side of a salted join: each (query, cell) cover row is
+    replicated once per salt slice of its cell, so every (point, query)
+    pair meets on exactly one (cell, salt) key."""
+    return (_splits(cover, plan)
+            .withColumn("salt", F.expr(
+                "explode(sequence(CAST(0 AS BIGINT), "
+                "CAST(coalesce(nsplits, 1) - 1 AS BIGINT)))"))
+            .drop("nsplits"))

@@ -2,12 +2,14 @@
 zero-area boxes and polygons sitting exactly on a point, and boxes and
 polygons touching every world edge (mx = 0, mx = 359999, my = 0,
 my = 179999).  Each case is checked against a pure-Python brute force,
-with the query side both broadcast and shuffled."""
+with the query side both broadcast and shuffled; the skew-salted range
+join (J8) also on a plan that really splits a hot cell."""
 
 import pytest
 
 from spatialgraft.ops.pip import pip_join_concave_count, pip_join_count
-from spatialgraft.ops.range import range_join_count
+from spatialgraft.ops.range import range_join_count, range_join_count_salted
+from spatialgraft.partitioner import max_splits, plan_partitions
 
 MX, MY = 359_999, 179_999
 SPOT = (123_456, 65_432)
@@ -190,3 +192,44 @@ def test_empty_sides(spark, op, queries):
             got = op(p, q, bc)
             assert got.collect() == []
             assert got.columns[-1] == "cnt"
+
+
+# 600 points in SPOT's join cell (mx 122344..123749, my 64688..66093),
+# enough to make it hot against the scattered fixture
+_HOT = [(122_344 + (i * 37) % 1_406, 64_688 + (i * 53) % 1_406)
+        for i in range(600)]
+# crosses the hot cell's lower-left border
+_HOT_BOX = (9, 123_000, 65_000, 130_000, 70_000)
+
+
+def test_range_join_count_salted_edges(spark):
+    """J8 against the brute force: the edge fixture plus a hot cell,
+    the hot cell's points alone (every point in one cell), and each
+    side empty, all on one plan whose hot cell splits."""
+    rows = _points()
+    rows += [(len(rows) + i, x, y) for i, (x, y) in enumerate(_HOT)]
+    pts = _points_df(spark, rows)
+    plan = plan_partitions(pts)
+    assert max_splits(plan) > 1, "fixture: no cell was salted"
+    boxes = BOXES + [_HOT_BOX]
+    qs = _boxes_df(spark, boxes)
+    hot = rows[-len(_HOT):]
+    wants = [(side, _brute_counts(side, [(b[0], b[1:]) for b in boxes],
+                                  _in_box)) for side in (rows, hot)]
+    assert all(want[9] > 0 for _, want in wants)
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    default = spark.conf.get(key)
+    try:
+        # the cover broadcast, then shuffled (broadcasting switched off)
+        for thr in (default, "-1"):
+            spark.conf.set(key, thr)
+            for side, want in wants:
+                got = range_join_count_salted(_points_df(spark, side), qs,
+                                              plan)
+                assert _counts(got, "box_id") == want, f"threshold={thr}"
+            for p, q in ((pts.limit(0), qs), (pts, qs.limit(0))):
+                got = range_join_count_salted(p, q, plan)
+                assert got.collect() == []
+                assert got.columns[-1] == "cnt"
+    finally:
+        spark.conf.set(key, default)

@@ -1,5 +1,5 @@
-"""One-pass kNN join: every path (lazy and eager, salted and planned
-(J9), data-side predicate (F6)) and every edge the synthetic tables
+"""One-pass kNN join: every path (lazy and eager, planned (J9),
+data-side predicate (F6)) and every edge the synthetic tables
 never reach (k >= n, no points, one coordinate, world-edge queries) is
 checked bit-exactly against a brute-force cross-join twin."""
 
@@ -73,20 +73,6 @@ def test_salted_knn_identical_and_nonvacuous(spark, sf_correct):
         "skew fixture produced no salted cells"
     _assert_same(knn_join(pts, qs, k=10, plan=plan),
                  knn_join(pts, qs, k=10))
-
-
-def test_uniform_salt_identical(spark, sf_correct):
-    """knn_join(salt=N) — the plan-free skew knob — must be bit-exact
-    against the unsalted join in BOTH materialize modes (the probe keys
-    on (cell, salt) when salted)."""
-    pts = with_geometry(datagen.documents_spans(spark, sf_correct))
-    qs = datagen.knn_queries(spark, sf_correct)
-    base = knn_join(pts, qs, k=10)
-    _assert_same(knn_join(pts, qs, k=10, salt=8), base)
-    _assert_same(knn_join(pts, qs, k=10, salt=8, materialize=True), base)
-    # the uncached eager path (gate protocol) must also be bit-exact
-    _assert_same(knn_join(pts, qs, k=10, salt=8, materialize=True,
-                          cache_input=False), base)
 
 
 def test_k150_matches_brute_force(spark, sf_smoke, sf_correct):
@@ -210,20 +196,83 @@ def test_lazy_generated_input_never_broadcast(spark, sf_smoke):
     _assert_same(lazy, knn_join(big, qs, k=3, materialize=True))
 
 
-def test_broadcast_gate_counts_salt(spark, sf_smoke):
-    """ADVICE r5: the cover auto-broadcast gate must multiply the
-    fan-out by the effective salt replication of the multicast side."""
+class _HandleWithoutPlan:
+    """A py4j DataFrame handle whose queryExecution raises, as if the
+    internal plan API changed shape; every other call goes through."""
+
+    def __init__(self, jdf):
+        self._jdf = jdf
+
+    def __getattr__(self, name):
+        if name == "queryExecution":
+            raise AttributeError("no queryExecution on this handle")
+        return getattr(self._jdf, name)
+
+
+def test_lineage_check_fallback_warns_once(spark, sf_smoke, monkeypatch):
+    """ROADMAP item 5: when the lazy path cannot read the points'
+    lineage it takes the sort-merge hint, with identical rows, and says
+    so exactly once per process."""
+    import warnings
+
+    from spatialgraft.ops import knn
+    monkeypatch.setattr(knn, "_lineage_warned", False)
+    qs = datagen.knn_queries(spark, sf_smoke).limit(40)
+    want = knn_join(with_geometry(datagen.documents_spans(spark, sf_smoke)),
+                    qs, k=5)
+    pts = with_geometry(datagen.documents_spans(spark, sf_smoke))
+    pts._jdf = _HandleWithoutPlan(pts._jdf)
+    with warnings.catch_warnings(record=True) as w:
+        warnings.simplefilter("always")
+        got = [knn_join(pts, qs, k=5) for _ in range(2)]
+    fired = [x for x in w if issubclass(x.category, RuntimeWarning)
+             and "lineage check failed" in str(x.message)]
+    assert len(fired) == 1
+    assert "AttributeError: no queryExecution on this handle" in \
+        str(fired[0].message)
+    for g in got:
+        assert "strategy=merge" in \
+            g._jdf.queryExecution().optimizedPlan().toString()
+        _assert_same(g, want)
+
+
+def test_broadcast_gate_counts_salt(spark, sf_smoke, monkeypatch):
+    """ADVICE r5: the cover's auto-broadcast gate must multiply the
+    fan-out by the hottest salt split of the plan — on the kNN probe
+    (J9) and the salted range join (J8) alike."""
+    from spatialgraft import broadcast, cells
     from spatialgraft.broadcast import plan_size_bytes, threshold_bytes
-    from spatialgraft.ops.knn import _COVER_FANOUT, _bc_cover
+    from spatialgraft.cells import COVER_FANOUT
+    from spatialgraft.ops import knn
+    from spatialgraft.ops import range as rops
+    from spatialgraft.partitioner import SpatialPartitioning, max_splits
     qs = datagen.knn_queries(spark, sf_smoke)
     est, thr = plan_size_bytes(qs), threshold_bytes(spark)
-    assert 0 < est * _COVER_FANOUT <= thr, "fixture: unsalted cover must fit"
-    assert _bc_cover(qs, 1, None)
-    big_salt = int(thr // (est * _COVER_FANOUT) + 1)
-    assert not _bc_cover(qs, big_salt, None)
+    assert 0 < est * COVER_FANOUT <= thr, "fixture: unsalted cover must fit"
+    big_salt = int(thr // (est * COVER_FANOUT) + 1)
+    plan = SpatialPartitioning({0: (0, 1), 1: (0, big_salt)}, 1, 0)
+    assert max_splits(plan) == big_salt and max_splits(None) == 1
+    assert broadcast.decide(qs, None, COVER_FANOUT)
+    assert not broadcast.decide(qs, None, COVER_FANOUT * big_salt)
     # explicit flags still win over the gate
-    assert _bc_cover(qs, big_salt, True) is True
-    assert _bc_cover(qs, 1, False) is False
+    assert broadcast.decide(qs, True, COVER_FANOUT * big_salt) is True
+    assert broadcast.decide(qs, False, COVER_FANOUT) is False
+
+    fanouts = []
+
+    def spy(side, flag, fanout):
+        fanouts.append(fanout)
+        return broadcast.decide(side, flag, fanout)
+
+    monkeypatch.setattr(knn, "decide", spy)
+    monkeypatch.setattr(cells, "decide", spy)
+    pts = with_geometry(datagen.documents_spans(spark, sf_smoke))
+    boxes = datagen.query_boxes(spark, sf_smoke)
+    knn_join(pts, qs, k=3)
+    knn_join(pts, qs, k=3, plan=plan)
+    rops.range_join_count(pts, boxes)
+    rops.range_join_count_salted(pts, boxes, plan)
+    assert fanouts == [COVER_FANOUT, COVER_FANOUT * big_salt] * 2
 
 
 def test_cache_sizing_advisory(spark):
@@ -345,8 +394,6 @@ def test_salt_and_plan_match_brute_force(spark, sf_correct):
         "skew fixture produced no salted cells"
     want = _brute(pts, qs, k=10)
     for mat in (False, True):
-        _assert_same(knn_join(pts, qs, k=10, salt=4, materialize=mat),
-                     want)
         _assert_same(knn_join(pts, qs, k=10, plan=plan, materialize=mat),
                      want)
 
